@@ -169,6 +169,12 @@ def jaccard_pairs_docs(docs: DataFrame, threshold: float = 0.5,
       have failed the final ``>= threshold`` filter bit-for-bit.
       Sub-threshold skew pairs (one giant doc sharing shingles with many
       small ones) die before the aggregate instead of after it.
+
+    Precondition: ``id_col`` values are unique. Each row is one document
+    carrying its own shingle count ``n``, and ``n`` is part of the pair
+    aggregate key; two rows sharing an id split that id's pairs into one
+    output row per row-size combination, with counts that match neither
+    row nor their union. Deduplicate ids before calling.
     """
     # Three plan-shape traps, each measured before this landed:
     # - n is materialized in its OWN projection below the Generate:

@@ -111,7 +111,7 @@ def trailing_features(df: DataFrame, spec: TrailingWindowSpec) -> DataFrame:
     # fractional literals carry the D suffix so they stay DOUBLE — a
     # bare 0.02 parses as DECIMAL(2,2)).
     out = df.withColumn("_ts_ms", _ms(spec.ts_col))
-    q = lambda c: f"`{c}`"  # noqa: E731
+    q = lambda c: "`" + c.replace("`", "``") + "`"  # noqa: E731
     amt = q(spec.amount_col)
     amt_dec = f"CAST({amt} AS {DEC})"
     amt_sq_dec = f"CAST(({amt} * {amt}) AS {DEC4})"

@@ -39,7 +39,7 @@ def bounded_shuffle_partitions(spark, source_dir: str):
         _os.path.getsize(p)
         for p in _glob.glob(_os.path.join(source_dir, "**", "*.parquet"), recursive=True)
     )
-    cores = int(_os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = spark.sparkContext.defaultParallelism
     n = max(4, min(cores, -(-size // _BYTES_PER_PARTITION)))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))

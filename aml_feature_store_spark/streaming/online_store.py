@@ -5,27 +5,55 @@ flink_job/aml_stream_processor.py:203-221, api/main.py:327-363).
 Spark-first: the online store is a **latest-value table** keyed by entity,
 maintained by ``foreachBatch`` last-write-wins merge. With Delta/Iceberg
 on the classpath this is ``MERGE INTO``; this environment has neither, so
-the merge is emulated with read → anti-join → union → staged write →
-directory swap on a parquet dir. The swap is two renames, so a crash can
-interrupt it — every entry point first runs deterministic recovery
-(roll back a half-swap from the well-known ``.old`` dir, drop orphan
-``.staging.*`` dirs), under a single-writer assumption. TTL is a
-read-time predicate on feature_timestamp, exactly the 24 h Redis EXPIRE
-semantics.
+the merge is emulated on a parquet dir: the current table (tagged
+``_src=0``) and the batch (``_src=1``) are unioned and one ``row_number``
+window per entity, ordered by ``_src desc, ts desc``, keeps one row. A batch row therefore always replaces the stored row, and
+the latest batch row per key wins. The batch is read once (inside
+``foreachBatch`` it is an uncached scan of the stream's stateful plan)
+and there is one shuffle. The result goes to a staging dir, then a
+directory swap. The swap is two renames, so a crash can interrupt it —
+every entry point first runs deterministic recovery (roll back a half-swap
+from the well-known ``.old`` dir, drop orphan ``.staging.*`` dirs), under
+a single-writer assumption.
+
+The merge also writes ``_meta.json`` into the staging dir before the swap,
+so it is swapped atomically with the data: ``{"schema": <StructType
+json>, "max_ts_us": <max feature_ts as epoch µs, null if empty>}``. The max
+is read on the driver with pyarrow from the staged files' ts column, so it
+costs no Spark job. (``DataFrame.observe`` with an ``Observation`` would
+also be job-free, but on Spark 4.1 it leaves the session unserializable,
+which breaks e.g. ``LogisticRegressionModel.summary`` later in the same
+session.) Readers pass the stored schema to ``spark.read.schema`` (no
+schema-inference job) and use ``max_ts_us`` as the default ``now`` (no
+aggregate job), so a lookup is a single scan-and-filter job. Spark and
+pyarrow skip files whose names start with ``_``, so data readers never see
+it. A store dir without ``_meta.json`` is rejected with
+``FileNotFoundError`` naming the missing file; there is no fallback.
+
+NULL entity keys form one key, like any other value: a merge keeps at
+most one NULL-key row (the latest batch row wins).
+
+TTL is a read-time predicate on feature_timestamp, exactly the 24 h Redis
+EXPIRE semantics.
 """
 
 from __future__ import annotations
 
+import errno
 import glob
+import json
 import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from ..operators.pit import latest_snapshot
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import StructType
 
 TTL_SECONDS_DEFAULT = 86400  # reference: EXPIRE 86400
+META_FILE = "_meta.json"
 
 
 class OnlineStore:
@@ -37,9 +65,6 @@ class OnlineStore:
         self.path = path
         self.entity_col = entity_col
         self.ts_col = ts_col
-
-    def _exists(self) -> bool:
-        return os.path.exists(os.path.join(self.path, "_SUCCESS"))
 
     @property
     def _old(self) -> str:
@@ -67,20 +92,50 @@ class OnlineStore:
         for orphan in glob.glob(f"{self.path}.staging.*"):
             shutil.rmtree(orphan, ignore_errors=True)
 
+    def _meta(self) -> dict | None:
+        """The store's ``_meta.json``; None when no store exists yet.
+        Raises ``FileNotFoundError`` naming the file when the store dir
+        exists without it."""
+        if not os.path.exists(self.path):
+            return None
+        meta = os.path.join(self.path, META_FILE)
+        try:
+            with open(meta) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            raise FileNotFoundError(
+                errno.ENOENT,
+                f"online store has no {META_FILE} (written by OnlineStore.merge)",
+                meta,
+            ) from None
+
+    def _scan(self, meta: dict) -> DataFrame:
+        return self.spark.read.schema(StructType.fromJson(meta["schema"])).parquet(self.path)
+
+    def _max_ts_us(self, table_dir: str) -> int | None:
+        """Max of the ts column of the parquet files in ``table_dir``, as
+        epoch µs. Spark writes timestamps as INT96, which carries no
+        min/max statistics, so the column itself is read."""
+        col = pq.read_table(
+            table_dir, columns=[self.ts_col], coerce_int96_timestamp_unit="us"
+        ).column(0)
+        return pc.max(col.cast(pa.timestamp("us", col.type.tz))).value
+
     def merge(self, batch: DataFrame) -> None:
         """Last-write-wins upsert of a feature batch (the foreachBatch body)."""
         self._recover()
-        new = latest_snapshot(
-            batch, self.entity_col, self.ts_col, tiebreak_col=self.ts_col
+        meta = self._meta()
+        merged = batch.withColumn("_src", F.lit(1))
+        if meta is not None:
+            merged = self._scan(meta).withColumn("_src", F.lit(0)).unionByName(merged)
+        w = Window.partitionBy(self.entity_col).orderBy(
+            F.col("_src").desc(), F.col(self.ts_col).desc()
         )
-        if self._exists():
-            cur = self.spark.read.parquet(self.path)
-            keep = cur.join(
-                new.select(self.entity_col), self.entity_col, "left_anti"
-            )
-            merged = keep.unionByName(new)
-        else:
-            merged = new
+        merged = (
+            merged.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn", "_src")
+        )
         # parquet has no MERGE (Delta would): fully materialize the merged
         # result into a staging dir FIRST, then swap directories. The write
         # still reads the current table, but the current table is never
@@ -90,6 +145,10 @@ class OnlineStore:
         staging = f"{self.path}.staging.{uuid.uuid4().hex[:8]}"
         try:
             merged.write.mode("overwrite").parquet(staging)
+            meta = {"schema": merged.schema.jsonValue(),
+                    "max_ts_us": self._max_ts_us(staging)}
+            with open(os.path.join(staging, META_FILE), "w") as f:
+                json.dump(meta, f)
         except BaseException:
             shutil.rmtree(staging, ignore_errors=True)
             raise
@@ -119,16 +178,18 @@ class OnlineStore:
     def read(self, ttl_s: int = TTL_SECONDS_DEFAULT,
              now_expr: str | None = None) -> DataFrame:
         """TTL-filtered online view: rows whose feature_ts is within ttl of
-        `now` (default: the table's max feature_ts — deterministic for
-        tests; pass now_expr='current_timestamp()' in production)."""
+        `now` (default: the table's max feature_ts from ``_meta.json`` —
+        deterministic for tests; pass now_expr='current_timestamp()' in
+        production). Builds no Spark job."""
         self._recover()
-        df = self.spark.read.parquet(self.path)
+        meta = self._meta()
+        if meta is None:
+            raise FileNotFoundError(errno.ENOENT, "no online store at", self.path)
         if now_expr is None:
-            mx = df.agg(F.max(self.ts_col)).collect()[0][0]
-            now = F.lit(mx)
+            now = F.timestamp_micros(F.lit(meta["max_ts_us"]))
         else:
             now = F.expr(now_expr)
-        return df.filter(
+        return self._scan(meta).filter(
             F.unix_millis(now) - F.unix_millis(F.col(self.ts_col)) <= ttl_s * 1000
         )
 

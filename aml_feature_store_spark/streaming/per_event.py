@@ -622,14 +622,14 @@ def _adaptive_buckets(source_dir: str) -> int:
     so this only shrinks where the win is proven, and the parallelism
     story at real scale (buckets = the knob, raised to fit executor
     memory) is unchanged. Explicit ``n_buckets`` args and the
-    ``SPARK_GRAFT_STATE_BUCKETS`` env override bypass it entirely."""
+    ``SPARK_GRAFT_STATE_BUCKETS`` env override bypass it entirely. A dir
+    with no parquet files yet (a stream whose files land later) says
+    nothing about its volume, so it gets the default too."""
     import glob as _g
 
-    size = sum(
-        os.path.getsize(p)
-        for p in _g.glob(os.path.join(source_dir, "**", "*.parquet"), recursive=True)
-    )
-    if size >= _SMALL_INPUT_BYTES:
+    files = _g.glob(os.path.join(source_dir, "**", "*.parquet"), recursive=True)
+    size = sum(os.path.getsize(p) for p in files)
+    if not files or size >= _SMALL_INPUT_BYTES:
         return DEFAULT_BUCKETS
     return max(16, min(DEFAULT_BUCKETS, -(-size // _BUCKET_BYTES)))
 
@@ -677,16 +677,16 @@ def run_bounded(
     # and a non-starter on a cluster. Executors write in parallel; the
     # bounded result reads back as a plain DataFrame.
     dst = _run_tmpdir("out_per_event_")
-    # stream-scoped shuffle partitions = min(cores, buckets): state
-    # partitions beyond the bucket count hold zero groups yet still pay
-    # a state-store commit per micro-batch (r12; only ever SHRINKS, and
-    # only for small bounded replays — each run has a fresh checkpoint,
-    # so the state-partition count pin is per-run)
+    # stream-scoped shuffle partitions = min(current, cores, buckets):
+    # state partitions beyond the bucket count hold zero groups yet still
+    # pay a state-store commit per micro-batch (r12; only ever SHRINKS —
+    # each run has a fresh checkpoint, so the state-partition count pin
+    # is per-run)
     eff_buckets = n_buckets or DEFAULT_BUCKETS
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = spark.sparkContext.defaultParallelism
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(cores, eff_buckets))
+        "spark.sql.shuffle.partitions", str(min(int(prev_parts), cores, eff_buckets))
     )
     try:
         q = (

@@ -60,7 +60,7 @@ def test_trailing_multiwindow_single_shuffle(spark, qs):
     plan = _plan(qs["trailing_multiwindow_features"](spark, SF))
     assert _nodes(plan, "Exchange") == 1
     assert _nodes(plan, "Sort") == 1  # one sort feeds all three frames
-    assert _nodes(plan, "Window") == 3
+    assert _nodes(plan, "Window") == 1  # one selectExpr: one Window node
 
 
 def test_trailing_reads_only_needed_columns(spark, qs):

@@ -6,7 +6,9 @@ semantics; burst scenario."""
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
+import re
 import shutil
 import tempfile
 
@@ -168,6 +170,210 @@ def test_online_store_recovers_half_swap_and_orphans(spark, tmp_path):
     )
     assert not os.path.exists(path + ".old")
     assert {r["user_id"] for r in store.read(ttl_s=10 * 86400).collect()} == {1, 2}
+
+
+def _store_batch(spark, rows):
+    """(user_id, feature_ts as epoch µs, f) rows → a store batch; µs ints
+    keep sub-millisecond and pre-1970 values exact."""
+    return spark.createDataFrame(rows, "user_id long, us long, f double").select(
+        "user_id", F.timestamp_micros("us").alias("feature_ts"), "f"
+    )
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_online_store_merge_reads_batch_once(spark, tmp_path):
+    """Merging into an existing store evaluates the batch's plan once:
+    inside foreachBatch that plan is the stream's stateful operator."""
+    from pyspark.sql.types import LongType
+
+    store = OnlineStore(spark, str(tmp_path / "once"))
+    store.merge(_store_batch(spark, [(1, 0, 1.0), (2, 0, 2.0)]))
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(u):
+        seen.add(1)
+        return u
+
+    counted = F.udf(count, LongType())
+    batch = _store_batch(spark, [(1, 5, 1.5), (3, 5, 3.0), (3, 9, 3.5)]).withColumn(
+        "user_id", counted("user_id")
+    )
+    store.merge(batch)
+    assert seen.value == 3
+    got = {r["user_id"]: r["f"] for r in store.read(ttl_s=86400).collect()}
+    assert got == {1: 1.5, 2: 2.0, 3: 3.5}
+
+
+def test_online_store_job_counts(spark, tmp_path):
+    """A lookup is one scan-and-filter job (no schema inference, no max
+    aggregate); a merge into an existing store runs at most 3 jobs."""
+    store = OnlineStore(spark, str(tmp_path / "jobs"))
+    store.merge(_store_batch(spark, [(i, i, float(i)) for i in range(20)]))
+    n_merge = _jobs_in_group(
+        spark, "os_merge",
+        lambda: store.merge(_store_batch(spark, [(i, 100 + i, 0.0) for i in range(10, 30)])),
+    )
+    assert 1 <= n_merge <= 3
+    n_lookup = _jobs_in_group(spark, "os_lookup", lambda: store.lookup([1, 12, 25]).collect())
+    assert n_lookup == 1
+    assert {r["user_id"] for r in store.lookup([1, 12, 25]).collect()} == {1, 12, 25}
+
+
+def test_online_store_null_key_is_one_key(spark, tmp_path):
+    """NULL entity keys group like any other key: two merges with NULL-key
+    rows leave one NULL-key row, the later batch's."""
+    store = OnlineStore(spark, str(tmp_path / "nullkey"))
+    store.merge(_store_batch(spark, [(None, 10, 1.0), (None, 20, 2.0), (1, 10, 1.0)]))
+    store.merge(_store_batch(spark, [(None, 5, 3.0), (2, 10, 2.0)]))
+    rows = store.read(ttl_s=86400).collect()
+    nulls = [r for r in rows if r["user_id"] is None]
+    assert [r["f"] for r in nulls] == [3.0]  # batch row wins over a newer stored one
+    assert sorted(r["user_id"] for r in rows if r["user_id"] is not None) == [1, 2]
+
+
+@pytest.mark.parametrize("now_us", [
+    1_704_196_800_000_700,  # 2024-01-02 12:00:00.000700
+    -3_599_999_750,  # 1969-12-31 23:00:00.000250
+])
+def test_online_store_ttl_boundary_matches_aggregate_now(spark, tmp_path, now_us):
+    """The stored max_ts_us gives the same default `now`, to the µs, as
+    the max(feature_ts) aggregate read from the data: same rows at the
+    TTL edge, with sub-millisecond and pre-1970 timestamps."""
+    ttl = 3600
+    edge = now_us - ttl * 1_000_000
+    offsets = [0, 1, -1, -250, -251, -700, -701, -1000, -1001, -2000]
+    rows = [(0, now_us, 0.0)] + [
+        (i + 1, edge + d, float(i)) for i, d in enumerate(offsets)
+    ]
+    path = str(tmp_path / "ttl_edge")
+    store = OnlineStore(spark, path)
+    store.merge(_store_batch(spark, rows))
+    got = {r["user_id"] for r in store.read(ttl_s=ttl).collect()}
+    df = spark.read.parquet(path)
+    mx = df.agg(F.max("feature_ts")).collect()[0][0]
+    want = {
+        r["user_id"]
+        for r in df.filter(
+            F.unix_millis(F.lit(mx)) - F.unix_millis("feature_ts") <= ttl * 1000
+        ).collect()
+    }
+    assert got == want
+    with open(os.path.join(path, "_meta.json")) as f:
+        assert json.load(f)["max_ts_us"] == now_us
+    assert {0, 1, 2} <= got  # the row exactly `ttl` old is live
+    assert got != {r[0] for r in rows}  # and the edge does cut
+
+
+def test_online_store_half_swap_restores_meta_with_data(spark, tmp_path):
+    """A crash between the swap renames rolls back the previous version's
+    data AND its _meta.json, not the interrupted version's."""
+    path = str(tmp_path / "meta_swap")
+    store = OnlineStore(spark, path)
+    day = 86_400_000_000
+    store.merge(_store_batch(spark, [(1, 0, 1.0), (2, 0, 2.0)]))
+    store.merge(_store_batch(spark, [(2, 2 * day, 2.5)]))
+    # the interrupted version: a later max ts and another user set
+    other = OnlineStore(spark, str(tmp_path / "other"))
+    other.merge(_store_batch(spark, [(9, 9 * day, 9.0)]))
+    os.rename(path, path + ".old")
+    shutil.copytree(other.path, path + ".staging.deadbeef")
+
+    rows = {r["user_id"]: r["f"] for r in store.read(ttl_s=86400).collect()}
+    assert rows == {2: 2.5}  # v2's max is the TTL anchor; user 1 expired
+    with open(os.path.join(path, "_meta.json")) as f:
+        assert json.load(f)["max_ts_us"] == 2 * day
+    assert not os.path.exists(path + ".staging.deadbeef")
+
+
+def test_online_store_without_meta_fails_fast(spark, tmp_path):
+    path = str(tmp_path / "nometa")
+    store = OnlineStore(spark, path)
+    store.merge(_store_batch(spark, [(1, 0, 1.0)]))
+    meta = os.path.join(path, "_meta.json")
+    os.remove(meta)
+    with pytest.raises(FileNotFoundError, match=re.escape(meta)):
+        store.read()
+    with pytest.raises(FileNotFoundError, match=re.escape(meta)):
+        store.merge(_store_batch(spark, [(2, 0, 2.0)]))
+
+
+def test_online_store_empty_batch(spark, tmp_path):
+    """An empty first batch makes an empty store with a null max ts; the
+    next merge fills it."""
+    store = OnlineStore(spark, str(tmp_path / "empty"))
+    store.merge(_store_batch(spark, []))
+    assert store.read().count() == 0
+    store.merge(_store_batch(spark, [(1, 0, 1.0)]))
+    assert [r["user_id"] for r in store.read().collect()] == [1]
+
+
+def test_online_store_read_schema_matches_parquet(spark, tmp_path):
+    """The schema from _meta.json reads the table exactly as Parquet
+    schema inference would, after a first merge and after a later one."""
+    store = OnlineStore(spark, str(tmp_path / "schema"))
+    batch = spark.range(3).select(
+        F.col("id").alias("user_id"),
+        F.timestamp_micros("id").alias("feature_ts"),
+        F.lit("x").alias("s"),
+    )
+    for _ in range(2):
+        store.merge(batch)
+        assert store.read().schema == spark.read.parquet(store.path).schema
+
+
+def test_run_bounded_only_shrinks_shuffle_partitions(spark, tmp_path, monkeypatch):
+    """run_bounded's partition pin is min(current, cores, buckets): it
+    never raises spark.sql.shuffle.partitions and restores it after."""
+    import pandas as pd
+
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    src = str(tmp_path / "pin")
+    os.makedirs(src)
+    pd.DataFrame(
+        [(i, int((t0 + dt.timedelta(seconds=i)).timestamp() * 1e9), i % 3,
+          "purchase", 1.0, "{}") for i in range(30)],
+        columns=["event_id", "ts", "user_id", "event_type", "value", "props"],
+    ).to_parquet(f"{src}/e.parquet", index=False)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    conf = spark.conf
+    seen = []
+    real_set = conf.set
+
+    def spy(k, v):
+        if k == key:
+            seen.append(int(v))
+        real_set(k, v)
+
+    monkeypatch.setattr(conf, "set", spy)
+    try:
+        got = run_bounded(spark, src, WINDOWS, query_name="pe_pin").collect()
+        assert spark.conf.get(key) == "2"
+    finally:
+        monkeypatch.undo()
+        spark.conf.set(key, prev)
+    assert len(got) == 30
+    assert seen and max(seen) <= 2
+
+
+def test_adaptive_buckets_empty_dir_gets_default(tmp_path):
+    from aml_feature_store_spark.streaming.per_event import (
+        DEFAULT_BUCKETS,
+        _adaptive_buckets,
+    )
+
+    assert _adaptive_buckets(str(tmp_path)) == DEFAULT_BUCKETS
 
 
 def test_sliding_features_bounded_stream(spark, tmp_path):

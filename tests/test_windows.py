@@ -120,6 +120,17 @@ def test_users_partitioned_independently(spark):
     assert out[2]["txn_amount_sum_1m"] == 10.0
 
 
+def test_backtick_in_amount_column_name(spark):
+    """Column names go into SQL strings quoted; an embedded backtick must
+    be escaped, not end the quoted identifier."""
+    df = _mk(spark, [(0, 1, 5.0), (30, 1, 7.0)]).withColumnRenamed("value", "am`t")
+    spec = TrailingWindowSpec(windows={"1h": 3600}, amount_col="am`t")
+    out = sorted(trailing_features(df, spec).collect(), key=lambda r: r["event_id"])
+    assert [r["am`t"] for r in out] == [5.0, 7.0]
+    assert out[1]["txn_amount_sum_1h"] == 12.0
+    assert out[1]["max_txn_amount_1h"] == 7.0
+
+
 def test_std_and_velocity(spark):
     df = _mk(spark, [(0, 1, 10.0), (10, 1, 20.0)])
     spec = TrailingWindowSpec(windows={"1h": 3600})
