@@ -289,9 +289,6 @@ def _exact_collapse(docs: DataFrame, id_col: str = "doc_id",
     return members, reps
 
 
-_DUP_GUARD_CACHE: dict[tuple, bool] = {}
-
-
 def _has_exact_dups(docs: DataFrame, id_col: str = "doc_id",
                     content_col: str = "text") -> bool:
     """One cheap aggregate deciding whether the exact-dup pre-collapse
@@ -303,26 +300,12 @@ def _has_exact_dups(docs: DataFrame, id_col: str = "doc_id",
     — and EXACT (approx_count_distinct could under-count and silently
     skip a needed collapse). NULL texts hash to NULL, which the distinct
     count ignores, so >=2 NULL-text docs conservatively report "has
-    dups" and take the collapse path (which handles them correctly).
-
-    Memoized per input fileset (path+size+mtime, same contract as the
-    trailing router's stats caches): the dup-state of a static corpus
-    never changes, so repeated plan builds — bench repeats, interactive
-    re-queries — pay the guard job once per session (r11, VERDICT #6)."""
-    from .windows import _STATS_CACHE_CAP, _cache_put, _files_sig
-
-    files = _files_sig(docs)
-    key = (files, id_col, content_col) if files else None
-    if key is not None and key in _DUP_GUARD_CACHE:
-        return _DUP_GUARD_CACHE[key]
+    dups" and take the collapse path (which handles them correctly)."""
     row = docs.agg(
         F.count(F.col(id_col)).alias("n"),
         F.count_distinct(F.md5(F.col(content_col))).alias("d"),
     ).first()
-    out = (row["n"] or 0) != (row["d"] or 0)
-    if key is not None:
-        _cache_put(_DUP_GUARD_CACHE, key, out, _STATS_CACHE_CAP)
-    return out
+    return (row["n"] or 0) != (row["d"] or 0)
 
 
 def _shingled_reps(reps: DataFrame, id_col: str = "doc_id") -> DataFrame:

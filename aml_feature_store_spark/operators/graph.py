@@ -16,9 +16,21 @@ inherently global and stay out of engine scope per SURVEY §4.4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 DEC = "decimal(25,2)"
+
+
+def _round_dp(col: Column, dp: int) -> Column:
+    """``round(x, dp)`` with the oracle's double semantics: x·10^dp
+    rounded to the nearest integer (half away from zero), divided back.
+    Spark's ``F.round(x, dp)`` applies HALF_UP to x's decimal string
+    instead, so it rounds up a double whose string ends in an exact 5
+    past ``dp`` while DuckDB, rounding the scaled double, rounds it down
+    (0.0627800175: Spark 0.062780018, DuckDB 0.062780017). At 0 dp the
+    two agree, since a double that is not a half never prints as one."""
+    scale = F.lit(float(10**dp))
+    return F.round(col * scale, 0) / scale
 
 
 def edge_list(
@@ -638,6 +650,7 @@ def pagerank(
     Determinism contract (mirrors the unrolled-CTE DuckDB oracle): every
     iteration's rank is rounded to 12 dp, resynchronizing Spark's and the
     oracle's float summation orders; the final output rounds to 9 dp.
+    Both roundings are :func:`_round_dp`, the oracle's own ``round``.
 
     Scale shape: per iteration, one src-keyed broadcast-free join + one
     dst-keyed hash aggregation — the canonical distributed PageRank. The
@@ -697,7 +710,7 @@ def pagerank(
             )
             .select(
                 "node",
-                F.round(
+                _round_dp(
                     F.lit(base)
                     + F.lit(damping) * F.coalesce("c", F.lit(0.0)),
                     12,
@@ -707,7 +720,7 @@ def pagerank(
         if (it + 1) % checkpoint_every == 0 or it == n_iters - 1:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select(
-        "node", (F.round(F.col("rank"), 9) + F.lit(0.0)).alias("pagerank")
+        "node", (_round_dp(F.col("rank"), 9) + F.lit(0.0)).alias("pagerank")
     )
 
 
@@ -789,7 +802,7 @@ def hits(
         )
         auths = a_raw.crossJoin(F.broadcast(a_norm)).select(
             F.col("dst").alias("node"),
-            F.round(
+            _round_dp(
                 F.col("a_raw").cast("double") / _guarded_norm("authority"),
                 12,
             ).alias("a"),
@@ -821,7 +834,7 @@ def hits(
         )
         hubs = h_raw.crossJoin(F.broadcast(h_norm)).select(
             F.col("src").alias("node"),
-            F.round(
+            _round_dp(
                 F.col("h_raw").cast("double") / _guarded_norm("hub"), 12
             ).alias("h"),
         )
@@ -830,12 +843,12 @@ def hits(
     return hubs.select(
         "node",
         F.lit("hub").alias("role"),
-        (F.round(F.col("h"), 9) + F.lit(0.0)).alias("score"),
+        (_round_dp(F.col("h"), 9) + F.lit(0.0)).alias("score"),
     ).union(
         auths.select(
             "node",
             F.lit("authority").alias("role"),
-            (F.round(F.col("a"), 9) + F.lit(0.0)).alias("score"),
+            (_round_dp(F.col("a"), 9) + F.lit(0.0)).alias("score"),
         )
     )
 
@@ -924,7 +937,7 @@ def pagerank_bipartite_smallside(
     lattice = lambda r: F.floor(  # noqa: E731  — the generic per-edge snap
         F.col(r) / F.col("outdeg") * F.lit(1e12) + F.lit(0.5)
     )
-    rank_of = lambda c: F.round(  # noqa: E731
+    rank_of = lambda c: _round_dp(  # noqa: E731
         F.lit(base)
         + F.lit(damping) * (F.col(c).cast("double") / F.lit(1e12)),
         12,
@@ -958,7 +971,7 @@ def pagerank_bipartite_smallside(
             bmap_prev = _score_map(mb_prev2, "b", lattice("r"))
             src = adj.crossJoin(F.broadcast(bmap_prev)).withColumn(
                 "_r",
-                F.round(
+                _round_dp(
                     F.lit(base)
                     + F.lit(damping) * (fold_bs.cast("double") / F.lit(1e12)),
                     12,
@@ -985,7 +998,7 @@ def pagerank_bipartite_smallside(
         bmap_final = _score_map(mb_prev2, "b", lattice("r"))
         ua = adj.crossJoin(F.broadcast(bmap_final)).select(
             "a",
-            F.round(
+            _round_dp(
                 F.lit(base)
                 + F.lit(damping) * (fold_bs.cast("double") / F.lit(1e12)),
                 12,
@@ -993,7 +1006,7 @@ def pagerank_bipartite_smallside(
         )
     out = lambda df, key: df.select(  # noqa: E731
         F.col(key).alias("node"),
-        (F.round(F.col("r"), 9) + F.lit(0.0)).alias("pagerank"),
+        (_round_dp(F.col("r"), 9) + F.lit(0.0)).alias("pagerank"),
     )
     return out(ua, "a").union(out(mb, "b"))
 
@@ -1052,7 +1065,7 @@ def hits_smallside(
         a_norm = a_raw.agg(norm_of("a_raw"))
         auths = a_raw.crossJoin(F.broadcast(a_norm)).select(
             "dst",
-            F.round(
+            _round_dp(
                 F.col("a_raw").cast("double") / _guarded_norm("authority"),
                 12,
             ).alias("a"),
@@ -1074,18 +1087,18 @@ def hits_smallside(
         hubs = h_raw.crossJoin(F.broadcast(h_norm)).select(
             "src",
             "ds",
-            F.round(
+            _round_dp(
                 F.col("h_raw").cast("double") / _guarded_norm("hub"), 12
             ).alias("h"),
         )
     return hubs.select(
         F.col("src").alias("node"),
         F.lit("hub").alias("role"),
-        (F.round(F.col("h"), 9) + F.lit(0.0)).alias("score"),
+        (_round_dp(F.col("h"), 9) + F.lit(0.0)).alias("score"),
     ).union(
         auths.select(
             F.col("dst").alias("node"),
             F.lit("authority").alias("role"),
-            (F.round(F.col("a"), 9) + F.lit(0.0)).alias("score"),
+            (_round_dp(F.col("a"), 9) + F.lit(0.0)).alias("score"),
         )
     )

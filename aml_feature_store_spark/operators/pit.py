@@ -218,16 +218,11 @@ def point_in_time_features_scalable(
     )
 
 
-# same crossover rationale as windows.AUTO_FRAME_ROWS_THRESHOLD
-PIT_AUTO_FRAME_ROWS_THRESHOLD = 32
-
-
 def point_in_time_features_auto(
     spine: DataFrame,
     events: DataFrame,
     entity_col: str = "user_id",
     window_s: int = 86400,
-    frame_rows_threshold: int = PIT_AUTO_FRAME_ROWS_THRESHOLD,
     **kw,
 ) -> DataFrame:
     """Adaptive as-of join: estimate expected frame density from one cheap
@@ -236,14 +231,15 @@ def point_in_time_features_auto(
     results either way (property-tested). Density is the DENSEST
     entity's (skew-aware, shared with trailing_features_auto — r6: a
     mean estimate routes hot keys onto the per-task O(rows × frame)
-    path exactly when it hurts most)."""
-    from .windows import estimate_frame_rows
+    path exactly when it hurts most), and so is the crossover threshold
+    (windows.AUTO_FRAME_ROWS_THRESHOLD)."""
+    from .windows import AUTO_FRAME_ROWS_THRESHOLD, estimate_frame_rows
 
     ts_col = kw.get("event_ts_col", "ts")
     est = estimate_frame_rows(events, entity_col, ts_col, window_s)
     fn = (
         point_in_time_features
-        if est <= frame_rows_threshold
+        if est <= AUTO_FRAME_ROWS_THRESHOLD
         else point_in_time_features_scalable
     )
     return fn(spine, events, entity_col=entity_col, window_s=window_s, **kw)

@@ -205,8 +205,7 @@ def trailing_sums_scalable(
     u = real.unionByName(shadows)
     bucketized = hot_buckets is not None and bool(hot_buckets.ents)
     if bucketized:
-        skey = _hot_cache_key(df, spec, hot_buckets)
-        carry = _hot_carry_literals(df, spec, hot_buckets, key=skey)
+        carry = _hot_carry_literals(df, spec, hot_buckets)
         u = u.withColumn("_b", _bucket_expr(hot_buckets))
         w = (
             Window.partitionBy("_ent", "_b")
@@ -226,12 +225,7 @@ def trailing_sums_scalable(
     if bucketized:
         # stitch the bucket-prefix carry (coalesced — every downstream
         # read of _cum_s already coalesces empty frames to 0)
-        sums = _STITCH_CACHE.get(("sums", skey)) if skey is not None else None
-        if sums is None:
-            sums = _carry_sum_exprs(hot_buckets, carry)
-            if skey is not None:
-                _cache_put(_STITCH_CACHE, ("sums", skey), sums, _CARRY_CACHE_CAP)
-        cy_s, cy_n, _ = sums
+        cy_s, cy_n, _ = _carry_sum_exprs(hot_buckets, carry)
         cs = F.coalesce(cs, F.lit(0).cast(_SUM_T)) + cy_s
         cn = cn + cy_n
     cum = u.select(
@@ -313,43 +307,11 @@ def _bucket_expr(hb: HotBucketSpec) -> Column:
     )
 
 
-_HOT_CARRY_CACHE: dict[tuple, dict] = {}
-_STITCH_CACHE: dict[tuple, object] = {}
-
-# Session-memoization bounds (the caches' intent is "pay the stats job /
-# literal fold once per repeated query over a static input", not an
-# unbounded store: carry dicts hold buckets-length arrays per entity and
-# stitch entries hold large Column trees). FIFO eviction — insertion
-# order is recency enough for per-session reuse patterns.
-_STATS_CACHE_CAP = 32
-_CARRY_CACHE_CAP = 8
-
-
-def _cache_put(cache: dict, key, val, cap: int) -> None:
-    while len(cache) >= cap and key not in cache:
-        cache.pop(next(iter(cache)))
-    cache[key] = val
-
-
-def clear_plan_caches() -> None:
-    """Drop every memoized routing statistic, carry fold, and stitch
-    Column tree. The cache keys include each input file's (size, mtime)
-    for local files, so plain dataset regeneration invalidates naturally;
-    call this only after an in-place rewrite the listing cannot see
-    (e.g. an object-store overwrite preserving sizes)."""
-    _HOT_CARRY_CACHE.clear()
-    _STITCH_CACHE.clear()
-    _FRAME_EST_CACHE.clear()
-    _HOT_CUTS_CACHE.clear()
-
-
 def _files_sig(df: DataFrame) -> tuple:
-    """Cache signature of the plan's input files: (path, size, mtime_ns)
-    per file, so data rewritten AT THE SAME PATHS within a driver session
-    (INSERT OVERWRITE, regenerated .scale datasets) invalidates the
-    memoized stats/carries instead of silently reusing stale values.
-    Non-local URIs fall back to path-only entries (object stores write
-    immutable objects in practice; see :func:`clear_plan_caches`)."""
+    """Signature of the plan's input files: (path, size, mtime_ns) per
+    file. Sizes feed the stats-sampling threshold; the whole tuple keys
+    persisted indexes so data rewritten at the same paths is not served
+    from a stale build. Non-local URIs get (path, -1, -1) entries."""
     try:
         files = sorted(df.inputFiles())
     except Exception:
@@ -379,43 +341,20 @@ def _jdiv(a: int, b: int) -> int:
     return q if (a >= 0) == (b >= 0) else -q
 
 
-def _hot_cache_key(
-    df: DataFrame, spec: TrailingWindowSpec, hb: HotBucketSpec
-) -> tuple | None:
-    """Shared memoization key for the carry fold AND the stitch Column
-    trees (building ~30 literal-array Columns costs >1 s of py4j per
-    plan build — Columns are immutable expression trees, safe to reuse
-    across plans)."""
-    files = _files_sig(df)
-    if not files:
-        return None
-    return (
-        files,
-        spec.entity_col,
-        spec.ts_col,
-        spec.amount_col,
-        tuple(spec.windows.items()),
-        tuple(spec.distinct_cols),
-        hb.buckets,
-        tuple(sorted((str(k), v) for k, v in hb.ents.items())),
-    )
-
-
 def _hot_carry_literals(
     df: DataFrame,
     spec: TrailingWindowSpec,
     hb: HotBucketSpec,
-    key: tuple | None = None,
 ) -> dict:
     """Cross-bucket carry state of the bucketized scalable plan, folded
     on the driver from ONE hot-filtered aggregate (plus one marker
-    aggregate when the spec has distinct columns) and memoized per input
-    files. Bounded by construction: per hot entity, ``buckets`` running
-    sums plus, per window, the extrema of the single chunk crossing each
-    bucket edge (a chunk is an interval, so exactly one chunk contains
-    any given edge). The collect is ≤ (hot entities × buckets × chunks
-    of the narrowest window intersected per bucket) rows — at warehouse
-    scale cap the span/window ratio or raise ``buckets`` width, never
+    aggregate when the spec has distinct columns) at plan build. Bounded
+    by construction: per hot entity, ``buckets`` running sums plus, per
+    window, the extrema of the single chunk crossing each bucket edge
+    (a chunk is an interval, so exactly one chunk contains any given
+    edge). The collect is ≤ (hot entities × buckets × chunks of the
+    narrowest window intersected per bucket) rows — at warehouse scale
+    cap the span/window ratio or raise ``buckets`` width, never
     unbounded in the table size.
 
     Exactness: DECIMAL sums are folded with ``decimal.Decimal`` (exact,
@@ -445,10 +384,6 @@ def _hot_carry_literals(
     a driver OOM risk at exactly the scale this machinery targets."""
     from decimal import Decimal
 
-    if key is None:
-        key = _hot_cache_key(df, spec, hb)
-    if key is not None and key in _HOT_CARRY_CACHE:
-        return _HOT_CARRY_CACHE[key]
     nb = hb.buckets
     hot_ids = list(hb.ents)
     ms = _ms(spec.ts_col)
@@ -618,8 +553,6 @@ def _hot_carry_literals(
                 mk[tag] = arr
         out[ent] = {"s": s_arr, "n": n_arr, "s2": s2_arr, "ext": ext, "mk": mk}
     out["__amt_t"] = amt_t
-    if key is not None:
-        _cache_put(_HOT_CARRY_CACHE, key, out, _CARRY_CACHE_CAP)
     return out
 
 
@@ -792,9 +725,8 @@ def trailing_features_scalable(
     cross-bucket state is bounded — ≤ buckets running sums per entity,
     plus per window the one chunk that crosses each bucket edge — so it
     is computed ONCE at plan build by a driver-side fold over one
-    hot-filtered aggregate (memoized per input files, like the routing
-    stats) and stitched back as LITERAL array lookups keyed by the
-    bucket id:
+    hot-filtered aggregate and stitched back as LITERAL array lookups
+    keyed by the bucket id:
 
     - cumulative sums/counts/markers: ``local + exclusive_prefix[b]``
       (exact ``decimal.Decimal``/int addition on the driver — DECIMAL
@@ -914,8 +846,7 @@ def trailing_features_scalable(
     ]
     bucketized = hot_buckets is not None and bool(hot_buckets.ents)
     if bucketized:
-        skey = _hot_cache_key(df, spec, hot_buckets)
-        carry = _hot_carry_literals(df, spec, hot_buckets, key=skey)
+        carry = _hot_carry_literals(df, spec, hot_buckets)
         u = u.withColumn("_b", _bucket_expr(hot_buckets))
         u = u.repartition("_ent", "_b")
         part = ["_ent", "_b"]
@@ -957,12 +888,7 @@ def trailing_features_scalable(
         cols[f"_smn_{wname}"] = F.min("_amt").over(desc)
     cum = u.withColumns(cols)
     if bucketized:
-        glob = _STITCH_CACHE.get(("full", skey)) if skey is not None else None
-        if glob is None:
-            glob = _stitch_exprs(spec, hot_buckets, carry, tags)
-            if skey is not None:
-                _cache_put(_STITCH_CACHE, ("full", skey), glob, _CARRY_CACHE_CAP)
-        cum = cum.withColumns(glob)
+        cum = cum.withColumns(_stitch_exprs(spec, hot_buckets, carry, tags))
     cum = cum.filter(F.col("_win").isNull() | (F.col("_win") != "__mk"))
 
     isreal = F.col("_win").isNull()
@@ -1115,9 +1041,6 @@ AUTO_FRAME_ROWS_THRESHOLD = 32
 HOT_TASK_ROWS_THRESHOLD = 100_000
 HOT_BUCKETS = 64
 
-_FRAME_EST_CACHE: dict[tuple, float] = {}
-_HOT_CUTS_CACHE: dict[tuple, "HotBucketSpec | None"] = {}
-
 # Above this much input, the routing stats passes run on a seeded 1% ROW
 # sample instead of the full table (the full groupBy(entity) pass is one
 # cheap job at anchor scale but a real cost at warehouse scale). Row- —
@@ -1154,6 +1077,82 @@ def _stats_source(df: DataFrame, sample: bool | None) -> tuple[DataFrame, float]
     )
 
 
+def _entity_stats(
+    df: DataFrame,
+    entity_col: str,
+    ts_col: str,
+    window_s: int,
+    min_rows: int = HOT_TASK_ROWS_THRESHOLD,
+    cap: int = 32,
+    sample: bool | None = None,
+) -> tuple[float, list]:
+    """The routing stats pass: ONE groupBy(entity) → (count, min ms,
+    max ms) and ONE ``.first()`` over it holding both routing
+    statistics, so the router pays a single aggregate for both
+    decisions.
+
+    - ``est``: expected rows per ``window_s`` frame of the DENSEST
+      entity — max over entities of count × min(window / span, 1).
+    - ``hot``: the ≤ ``cap`` entities with count ≥ ``min_rows``, as
+      (−count, entity, min ms, max ms) structs sorted ascending, i.e. by
+      count descending with ties broken by entity. The collect before
+      the slice holds ≤ rows / ``min_rows`` entries.
+
+    On the sampled path (:func:`_stats_source`) counts scale by the
+    inverse fraction and entities with < _STATS_SAMPLE_MIN_ROWS sampled
+    rows drop out of ``est`` only (scaling a 1-row sample would
+    fabricate density); the hot filter is the scaled count alone."""
+    stats_df, inv = _stats_source(df, sample)
+    ms_col = F.unix_millis(F.col(ts_col))
+    per = stats_df.groupBy(entity_col).agg(
+        F.count(F.lit(1)).alias("c"),
+        F.min(ms_col).alias("mn"),
+        F.max(ms_col).alias("mx"),
+    )
+    dens = (
+        F.col("c")
+        * F.lit(inv)
+        * F.least(
+            F.lit(float(window_s * 1000))
+            / F.greatest((F.col("mx") - F.col("mn")).cast("double"), F.lit(1.0)),
+            F.lit(1.0),
+        )
+    )
+    if inv != 1.0:
+        dens = F.when(F.col("c") >= _STATS_SAMPLE_MIN_ROWS, dens)
+    hot = F.when(
+        F.col("c") * F.lit(inv) >= min_rows,
+        F.struct(
+            (-F.col("c")).alias("nc"),
+            F.col(entity_col).alias("ent"),
+            F.col("mn"),
+            F.col("mx"),
+        ),
+    )
+    row = per.agg(
+        F.max(dens).alias("est"),
+        F.slice(F.sort_array(F.collect_list(hot)), 1, cap).alias("hot"),
+    ).first()
+    return float(row["est"] or 0.0), row["hot"] or []
+
+
+def _hot_spec(hot: list, window_max_s: int, buckets: int) -> HotBucketSpec | None:
+    """Fixed-width time cuts for the hot entities of :func:`_entity_stats`.
+    The span is padded by the widest window so shadow probes (ms − W) and
+    interval markers (ms + W + 1) land inside the cut range; the bucket
+    expression clamps anyway, which only affects balance, never
+    correctness (bucket id stays monotone in ms)."""
+    if not hot:
+        return None
+    pad = window_max_s * 1000 + 1
+    ents = {}
+    for r in hot:
+        lo = int(r["mn"]) - pad
+        hi = int(r["mx"]) + pad + 1
+        ents[r["ent"]] = (lo, max(1, (hi - lo + buckets - 1) // buckets))
+    return HotBucketSpec(buckets=buckets, ents=ents)
+
+
 def hot_entity_cuts(
     df: DataFrame,
     entity_col: str,
@@ -1165,13 +1164,9 @@ def hot_entity_cuts(
     sample: bool | None = None,
 ) -> HotBucketSpec | None:
     """Detect entities whose row count would serialize a single task and
-    compute their fixed-width time cuts (one groupBy job, memoized per
-    input files like :func:`estimate_frame_rows`; driver result bounded
-    by ``cap``). The span is padded by the widest window so shadow
-    probes (ms − W) and interval markers (ms + W + 1) land inside the
-    cut range; the bucket expression clamps anyway, which only affects
-    balance, never correctness (bucket id stays monotone in ms).
-    Returns None when no entity crosses ``min_rows``.
+    compute their fixed-width time cuts (the :func:`_entity_stats` pass;
+    driver result bounded by ``cap``). Returns None when no entity
+    crosses ``min_rows``.
 
     At warehouse scale the pass runs on a 1% row sample (see
     :func:`_stats_source`): a hot entity keeps ~min_rows/100 sampled
@@ -1180,42 +1175,10 @@ def hot_entity_cuts(
     already applied. Cuts are a LOAD-BALANCING plan, never a
     correctness surface: any (lo, width) yields bit-identical results
     (pytest-pinned), so sampling noise only moves bucket edges."""
-    stats_df, inv = _stats_source(df, sample)
-    files = _files_sig(df)
-    key = (
-        (files, entity_col, ts_col, window_max_s, min_rows, buckets, cap, inv)
-        if files
-        else None
+    _, hot = _entity_stats(
+        df, entity_col, ts_col, window_max_s, min_rows, cap, sample
     )
-    if key is not None and key in _HOT_CUTS_CACHE:
-        return _HOT_CUTS_CACHE[key]
-    ms_col = F.unix_millis(F.col(ts_col))
-    rows = (
-        stats_df.groupBy(entity_col)
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.min(ms_col).alias("mn"),
-            F.max(ms_col).alias("mx"),
-        )
-        .filter(F.col("c") * F.lit(inv) >= min_rows)
-        .orderBy(F.col("c").desc())
-        .limit(cap)
-        .collect()
-    )
-    if not rows:
-        spec = None
-    else:
-        pad = window_max_s * 1000 + 1
-        ents = {}
-        for r in rows:
-            lo = int(r["mn"]) - pad
-            hi = int(r["mx"]) + pad + 1
-            width = max(1, (hi - lo + buckets - 1) // buckets)
-            ents[r[entity_col]] = (lo, width)
-        spec = HotBucketSpec(buckets=buckets, ents=ents)
-    if key is not None:
-        _cache_put(_HOT_CUTS_CACHE, key, spec, _STATS_CACHE_CAP)
-    return spec
+    return _hot_spec(hot, window_max_s, buckets)
 
 
 def estimate_frame_rows(
@@ -1225,53 +1188,23 @@ def estimate_frame_rows(
     window_s: int,
     sample: bool | None = None,
 ) -> float:
-    """One cheap stats pass → expected rows per trailing frame of the
-    DENSEST entity (per-entity rows × window/per-entity-span, maxed);
-    the shared density heuristic for every adaptive trailing strategy.
+    """One cheap stats pass (:func:`_entity_stats`) → expected rows per
+    trailing frame of the DENSEST entity (per-entity rows ×
+    window/per-entity-span, maxed); the shared density heuristic for
+    every adaptive trailing strategy.
 
     The max — not the mean — is the routing statistic: WindowExec cost
     is per TASK, and a skewed key (one entity owning 25% of the log)
     makes its task O(rows × frame) while the mean still looks sparse.
     The r6 skew anchor caught exactly that: mean density 2.3 rows/frame
     routed the hot anchor onto WindowExec and one task ran for minutes.
-    Cost: a groupBy(entity) count — one extra small job in the stats
-    pass. At warehouse scale (input > STATS_SAMPLE_BYTES, or
-    ``sample=True``) the pass runs on a 1% row sample: counts scale by
-    1/frac, entities with < _STATS_SAMPLE_MIN_ROWS sampled rows are
-    dropped (they cannot cross a routing threshold, and scaling a
-    1-row sample would fabricate density), and the shrunk sample span
-    only OVERestimates density — erring toward the O(rows) plan, the
-    safe direction since both strategies are bit-identical. Memoized
-    per (input files+sizes+mtimes, entity, window) for the session —
-    same contract as the persisted-index cache: the routing statistic
-    of a static input never changes, so repeated queries pay it once."""
-    stats_df, inv = _stats_source(df, sample)
-    files = _files_sig(df)
-    cache_key = (files, entity_col, ts_col, window_s, inv) if files else None
-    if cache_key is not None and cache_key in _FRAME_EST_CACHE:
-        return _FRAME_EST_CACHE[cache_key]
-    ms_col = F.unix_millis(F.col(ts_col))
-    per = stats_df.groupBy(entity_col).agg(
-        F.count(F.lit(1)).alias("c"),
-        (F.max(ms_col) - F.min(ms_col)).alias("espan"),
-    )
-    if inv != 1.0:
-        per = per.filter(F.col("c") >= _STATS_SAMPLE_MIN_ROWS)
-    stats = per.select(
-        F.max(
-            F.col("c")
-            * F.lit(inv)
-            * F.least(
-                F.lit(float(window_s * 1000))
-                / F.greatest(F.col("espan").cast("double"), F.lit(1.0)),
-                F.lit(1.0),
-            )
-        ).alias("hot")
-    ).first()
-    est = float(stats["hot"] or 0.0)
-    if cache_key is not None:
-        _cache_put(_FRAME_EST_CACHE, cache_key, est, _STATS_CACHE_CAP)
-    return est
+    At warehouse scale (input > STATS_SAMPLE_BYTES, or ``sample=True``)
+    the pass runs on a 1% row sample: counts scale by 1/frac, entities
+    with < _STATS_SAMPLE_MIN_ROWS sampled rows are dropped (they cannot
+    cross a routing threshold), and the shrunk sample span only
+    OVERestimates density — erring toward the O(rows) plan, the safe
+    direction since both strategies are bit-identical."""
+    return _entity_stats(df, entity_col, ts_col, window_s, sample=sample)[0]
 
 
 def trailing_features_auto(
@@ -1293,27 +1226,22 @@ def trailing_features_auto(
     windowed distincts (per-frame HLL is not marker-decomposable); exact
     distincts ride the scalable plan's interval markers.
 
-    On the scalable path a second memoized stats pass
-    (:func:`hot_entity_cuts`) checks for entities big enough to
-    serialize one task (``hot_rows_threshold``); those are
+    The same pass also lists the entities big enough to serialize one
+    task (``hot_rows_threshold``); on the scalable path those are
     time-bucketized so their windows parallelize across the cluster —
     see ``trailing_features_scalable(hot_buckets=...)``.
     """
     if spec.distinct_cols and not spec.distinct_exact:
         return trailing_features(df, spec)
-    est = estimate_frame_rows(
-        df, spec.entity_col, spec.ts_col, max(spec.windows.values())
+    w = max(spec.windows.values())
+    est, hot = _entity_stats(
+        df, spec.entity_col, spec.ts_col, w, min_rows=hot_rows_threshold
     )
     if est <= frame_rows_threshold:
         return trailing_features(df, spec)
-    hb = hot_entity_cuts(
-        df,
-        spec.entity_col,
-        spec.ts_col,
-        max(spec.windows.values()),
-        min_rows=hot_rows_threshold,
+    return trailing_features_scalable(
+        df, spec, hot_buckets=_hot_spec(hot, w, HOT_BUCKETS)
     )
-    return trailing_features_scalable(df, spec, hot_buckets=hb)
 
 
 def trailing_sums_scalable_oracle(

@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import register
 from ..operators import audio, dedup, multimodal, retrieval, simsearch, text
+from ..operators.windows import _files_sig
 from ..sources import load_table
 from ..streaming.per_event import _run_tmpdir
 
@@ -87,16 +88,18 @@ def knn_cosine_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simsearch.cosine_topk(emb, queries, k=10)
 
 
-# Built indexes are memoized per corpus dir for the life of the session:
+# Built indexes are memoized per corpus for the life of the session:
 # "build once, query many" is the persisted-index contract — rebuilding on
 # every query would make the registered query measure the build, not the
 # partition-pruned probe that is the operator's 100 TB point. First use
-# per sf_dir pays the build (visible in bench warm samples).
-_INDEX_CACHE: dict[tuple[str, str], str] = {}
+# per corpus pays the build (visible in bench warm samples). The key
+# carries the corpus files' (path, size, mtime_ns), so a corpus rewritten
+# at the same path gets a fresh build instead of the stale index.
+_INDEX_CACHE: dict[tuple, str] = {}
 
 
-def _cached_index(kind: str, sf_dir: str, build) -> str:
-    key = (kind, sf_dir)
+def _cached_index(kind: str, sf_dir: str, corpus: DataFrame, build) -> str:
+    key = (kind, sf_dir, _files_sig(corpus))
     if key not in _INDEX_CACHE:
         path = _run_tmpdir(f"{kind}_index_")
         build(path)
@@ -108,13 +111,13 @@ def _cached_index(kind: str, sf_dir: str, build) -> str:
 def ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persistent-IVF round trip (X3 index lifecycle): build the index
     (vectors partitioned by centroid bucket + centroid table) once per
-    corpus dir, then answer top-10 by probing ONLY the queries' buckets —
+    corpus, then answer top-10 by probing ONLY the queries' buckets —
     partition pruning at the file listing. Results are bit-identical to
     the in-memory IVF path, so the same oracle applies."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     path = _cached_index(
-        "ivf", sf_dir, lambda p: simsearch.build_ivf_index(emb, p)
+        "ivf", sf_dir, emb, lambda p: simsearch.build_ivf_index(emb, p)
     )
     return simsearch.ivf_index_topk(spark, path, queries, k=10)
 
@@ -857,7 +860,7 @@ def bm25_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the scan path."""
     docs = load_table(spark, sf_dir, "documents")
     path = _cached_index(
-        "text", sf_dir, lambda p: retrieval.build_text_index(docs, p)
+        "text", sf_dir, docs, lambda p: retrieval.build_text_index(docs, p)
     )
     return retrieval.index_bm25(spark, path, BM25_TERMS)
 

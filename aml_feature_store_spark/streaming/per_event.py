@@ -73,7 +73,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 DEFAULT_WINDOWS = {"5m": 300, "1h": 3600}
-DEFAULT_BUCKETS = int(os.environ.get("SPARK_GRAFT_STATE_BUCKETS", "256"))
+DEFAULT_BUCKETS = 256
 
 # composite key = entity_idx * 2^34 + (ts_ms − per-entity base): 2^34 ms
 # ≈ 199 days of offset per entity segment, 2^63 / 2^34 ≈ 5.4e8 entities
@@ -621,9 +621,9 @@ def _adaptive_buckets(source_dir: str) -> int:
     mid-size probe (1M events, 140 buckets) measured ~6% WORSE than 256,
     so this only shrinks where the win is proven, and the parallelism
     story at real scale (buckets = the knob, raised to fit executor
-    memory) is unchanged. Explicit ``n_buckets`` args and the
-    ``SPARK_GRAFT_STATE_BUCKETS`` env override bypass it entirely. A dir
-    with no parquet files yet (a stream whose files land later) says
+    memory) is unchanged. An explicit ``n_buckets`` arg to
+    :func:`per_event_features` bypasses it entirely. A dir with no
+    parquet files yet (a stream whose files land later) says
     nothing about its volume, so it gets the default too."""
     import glob as _g
 
@@ -664,11 +664,7 @@ def run_bounded(
 
     from ..sources.tables import stream_events
 
-    n_buckets = (
-        None  # per_event_features applies the env/default
-        if "SPARK_GRAFT_STATE_BUCKETS" in os.environ
-        else _adaptive_buckets(source_dir)
-    )
+    n_buckets = _adaptive_buckets(source_dir)
     events = stream_events(spark, source_dir, max_files_per_trigger)
     out = per_event_features(events, windows, n_buckets=n_buckets, extended=extended)
     ckpt = _run_tmpdir("ckpt_per_event_")
@@ -682,11 +678,10 @@ def run_bounded(
     # pay a state-store commit per micro-batch (r12; only ever SHRINKS —
     # each run has a fresh checkpoint, so the state-partition count pin
     # is per-run)
-    eff_buckets = n_buckets or DEFAULT_BUCKETS
     cores = spark.sparkContext.defaultParallelism
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(int(prev_parts), cores, eff_buckets))
+        "spark.sql.shuffle.partitions", str(min(int(prev_parts), cores, n_buckets))
     )
     try:
         q = (

@@ -337,3 +337,44 @@ def test_hits_smallside_equals_generic_random_bipartite(spark):
         )
     )
     assert fallback == generic
+
+
+def test_round_dp_matches_duckdb_round(spark):
+    """The graph kernels' 12-dp resync and 9-dp output rounding equals
+    DuckDB's ``round(x, n)`` (the oracle's) on half-boundary doubles,
+    where Spark's own ``round`` rounds a decimal-string 5 up."""
+    import math
+    import random
+
+    import duckdb
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from aml_feature_store_spark.operators.graph import _round_dp
+
+    rng = random.Random(408)
+    xs = [0.0627800175]
+    for dp in (9, 12):
+        for _ in range(400):
+            x = (rng.randrange(10**dp) + 0.5) / 10**dp
+            xs += [x, math.nextafter(x, 0.0), math.nextafter(x, 1.0)]
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i long, x double")
+    got = {
+        r["i"]: (r["r9"], r["r12"])
+        for r in df.select(
+            "i",
+            _round_dp(F.col("x"), 9).alias("r9"),
+            _round_dp(F.col("x"), 12).alias("r12"),
+        ).collect()
+    }
+    t = pa.table({"i": list(range(len(xs))), "x": xs})  # noqa: F841
+    want = {
+        i: (r9, r12)
+        for i, r9, r12 in duckdb.sql(
+            "SELECT i, round(x, 9), round(x, 12) FROM t"
+        ).fetchall()
+    }
+    assert got == want
+    assert got[0][0] == 0.062780017
+    spark_round = df.filter("i = 0").select(F.round("x", 9)).first()[0]
+    assert spark_round == 0.062780018

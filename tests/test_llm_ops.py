@@ -1180,3 +1180,49 @@ def test_quality_weighted_sample_biases_and_is_layout_invariant(spark):
     assert sample_mean > corpus_mean  # weighting biases toward quality
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
+
+
+def test_ivf_index_rebuilds_after_corpus_rewrite(spark, tmp_path):
+    """The persisted ANN index is keyed on the corpus files, not only on
+    the corpus dir: rewriting embeddings.parquet at the same path with
+    other vectors must answer from the new vectors."""
+    import os
+    import shutil
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aml_feature_store_spark.queries.llm_pipeline import (
+        N_QUERIES,
+        ann_ivf_index_topk,
+    )
+    from aml_feature_store_spark.sources import load_table
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    path = os.path.join(sf, "embeddings.parquet")
+    shutil.copy("/root/testdata/sf0.001/embeddings.parquet", path)
+
+    def topk(df):
+        return {(r["query_id"], r["rank"]): (r["vec_id"], r["cosine"])
+                for r in df.collect()}
+
+    before = topk(ann_ivf_index_topk(spark, sf))
+    tbl = pq.read_table(path)
+    vecs = tbl.column("embedding").to_pylist()
+    time.sleep(0.01)  # ensure a distinct mtime_ns
+    pq.write_table(
+        tbl.set_column(
+            tbl.schema.get_field_index("embedding"),
+            tbl.schema.field("embedding"),
+            pa.array(vecs[::-1], type=tbl.schema.field("embedding").type),
+        ),
+        path,
+    )
+    emb = load_table(spark, sf, "embeddings")
+    want = topk(
+        simsearch.ivf_topk(emb, emb.filter(F.col("vec_id") < N_QUERIES), k=10)
+    )
+    assert want != before
+    assert topk(ann_ivf_index_topk(spark, sf)) == want

@@ -462,43 +462,6 @@ def test_dual_sink_topology(spark, tmp_path):
     assert all(r["unique_customers"] <= 15 for r in m_rows.values())
 
 
-def test_transform_with_state_matches_batch(spark, tmp_path):
-    """The Spark-4 transformWithStateInPandas implementation must produce
-    the same per-event vectors as the batch window computation (and hence
-    as the applyInPandasWithState twin)."""
-    from aml_feature_store_spark.streaming.per_event_tws import (
-        per_event_features_tws,
-    )
-
-    src = str(tmp_path / "tws_src")
-    os.makedirs(src)
-    shutil.copy(os.path.join(SF_DIR, "events.parquet"), src)
-    from aml_feature_store_spark.sources.tables import stream_events
-
-    events = stream_events(spark, src)
-    out = per_event_features_tws(events, WINDOWS)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("tws_out")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_tws_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    except Exception as e:  # environment limitation, not a semantics bug
-        if "driver worker exited" in str(e):
-            pytest.skip(
-                "transformWithStateInPandas python driver worker crashes in "
-                "this container (even for a trivial processor); the "
-                "applyInPandasWithState twin is oracle-checked instead"
-            )
-        raise
-    got = spark.table("tws_out").collect()
-    _assert_consistent(got, _batch_reference(spark, SF_DIR))
-
-
 def test_long_span_replay_chunks_internally(spark, tmp_path):
     """A bounded replay spanning > 2^34 ms (~199 days) must succeed via
     the processor's internal time-chunking (r4 ADVICE: the old guard

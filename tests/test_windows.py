@@ -609,52 +609,153 @@ def test_routing_stats_sample_agrees_with_full(spark):
     assert abs(lo_s - lo_f) < 600_000 and abs(w_s - w_f) < 600_000
 
 
-def test_stats_cache_invalidates_on_inplace_rewrite(spark, tmp_path):
-    """Memoized routing stats key on (path, size, mtime): rewriting data
-    at the SAME path must invalidate, not silently reuse stale stats."""
-    import time as _time
-
+def _write_one_user(path, n, step_s):
+    """n events of user 1, ``step_s`` seconds apart, as an uncompressed
+    dictionary-free parquet file: its size depends on n only, never on
+    the timestamp values."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    tbl = pa.table(
+        {
+            "event_id": list(range(n)),
+            "ts": pa.array(
+                [1700000000_000_000 + i * step_s * 1_000_000 for i in range(n)],
+                type=pa.timestamp("us", tz="UTC"),
+            ),
+            "user_id": [1] * n,
+            "value": [float(i) for i in range(n)],
+        }
+    )
+    pq.write_table(tbl, path, compression="none", use_dictionary=False)
+
+
+def test_routing_stats_fresh_after_inplace_rewrite(spark, tmp_path):
+    """Rewriting data at the SAME path must yield fresh routing stats,
+    never stale ones."""
+    import time as _time
 
     from aml_feature_store_spark.operators.windows import estimate_frame_rows
 
     path = str(tmp_path / "ev.parquet")
-
-    def write(n_hot):
-        tbl = pa.table(
-            {
-                "event_id": list(range(n_hot)),
-                "ts": pa.array(
-                    [1700000000_000_000 + (i % 3600) * 1_000_000 for i in range(n_hot)],
-                    type=pa.timestamp("us", tz="UTC"),
-                ),
-                "user_id": [1] * n_hot,
-                "value": [float(i) for i in range(n_hot)],
-            }
-        )
-        pq.write_table(tbl, path)
-
-    write(500)
+    _write_one_user(path, 500, 1)
     est1 = estimate_frame_rows(
         spark.read.parquet(path), "user_id", "ts", 86400
     )
     _time.sleep(0.01)  # ensure a distinct mtime_ns
-    write(2000)
+    _write_one_user(path, 2000, 1)
     est2 = estimate_frame_rows(
         spark.read.parquet(path), "user_id", "ts", 86400
     )
     assert est1 == pytest.approx(500.0) and est2 == pytest.approx(2000.0)
 
 
-def test_plan_cache_bounds_and_jdiv():
-    """FIFO cache bound + Spark-div arithmetic helpers (pure python)."""
-    from aml_feature_store_spark.operators.windows import _cache_put, _jdiv
+def test_routing_stats_fresh_after_same_size_mtime_rewrite(spark, tmp_path):
+    """A rewrite that keeps path, size AND mtime (cp -p, rsync -a, an
+    object-store overwrite) must still yield fresh routing stats: the
+    router holds no state between plan builds."""
+    import os
 
-    c: dict = {}
-    for i in range(40):
-        _cache_put(c, i, i, 8)
-    assert len(c) == 8 and 39 in c and 0 not in c
+    from aml_feature_store_spark.operators.windows import estimate_frame_rows
+
+    path = str(tmp_path / "ev.parquet")
+    _write_one_user(path, 500, 1)  # span 499 s: every frame holds all 500
+    st = os.stat(path)
+    est1 = estimate_frame_rows(spark.read.parquet(path), "user_id", "ts", 86400)
+    _write_one_user(path, 500, 3600)  # span 499 h
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    st2 = os.stat(path)
+    assert (st2.st_size, st2.st_mtime_ns) == (st.st_size, st.st_mtime_ns)
+    est2 = estimate_frame_rows(spark.read.parquet(path), "user_id", "ts", 86400)
+    assert est1 == 500.0
+    assert est2 == 500 * (86400_000 / (499 * 3600_000))
+
+
+def test_auto_build_runs_one_stats_pass(spark, tmp_path, monkeypatch):
+    """Routing a dense build (scalable plan, no hot entity) costs the
+    footer sniff plus ONE stats pass: ≤ 4 jobs for the whole build."""
+    from aml_feature_store_spark.operators import windows
+    from aml_feature_store_spark.sources.tables import load_events
+
+    routed = []
+    scalable = windows.trailing_features_scalable
+    monkeypatch.setattr(
+        windows,
+        "trailing_features_scalable",
+        lambda *a, **k: routed.append(k) or scalable(*a, **k),
+    )
+    path = str(tmp_path / "ev.parquet")
+    _write_one_user(path, 500, 1)  # 500 rows per 24 h frame
+    sc = spark.sparkContext
+    sc.setJobGroup("auto_build", "auto_build")
+    try:
+        windows.trailing_features_auto(
+            load_events(spark, path),
+            windows.TrailingWindowSpec(windows={"24h": 86400}),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert routed == [{"hot_buckets": None}]
+    assert len(sc.statusTracker().getJobIdsForGroup("auto_build")) <= 4
+
+
+def test_fused_stats_exact_on_skew_fixture(spark):
+    """estimate_frame_rows and hot_entity_cuts, both readers of the one
+    per-entity aggregate, return hand-computed values: the densest
+    entity's frame rows, and the hot set by count descending with ties
+    broken by entity."""
+    from pyspark.sql import functions as F
+
+    from aml_feature_store_spark.operators.windows import (
+        estimate_frame_rows,
+        hot_entity_cuts,
+    )
+
+    t0 = 1_700_000_000
+    # user 1: 600 rows 1 min apart; user 2: 600 rows 10 min apart;
+    # user 3: 700 rows 1 h apart; users 10-19: 5 rows each, 6 days apart
+    legs = [(1, 600, 60), (2, 600, 600), (3, 700, 3600)] + [
+        (u, 5, 6 * 86400) for u in range(10, 20)
+    ]
+    df = None
+    for uid, n, step in legs:
+        leg = spark.range(n).select(
+            (F.col("id") + uid * 10_000).alias("event_id"),
+            F.timestamp_seconds(F.lit(t0) + F.col("id") * step).alias("ts"),
+            F.lit(uid).cast("long").alias("user_id"),
+            F.lit(1.0).alias("value"),
+        )
+        df = leg if df is None else df.unionByName(leg)
+    # spans: 35 940 s, 359 400 s, 2 516 400 s
+    assert estimate_frame_rows(df, "user_id", "ts", 86400) == 600.0
+    assert estimate_frame_rows(df, "user_id", "ts", 3600) == max(
+        600 * (3600_000 / 35_940_000),
+        600 * (3600_000 / 359_400_000),
+        700 * (3600_000 / 2_516_400_000),
+        5 * (3600_000 / (4 * 6 * 86400_000)),
+    )
+    pad = 86400_000 + 1
+    lo = t0 * 1000 - pad
+
+    def cut(n, step):
+        return (lo, -(-(((t0 + (n - 1) * step) * 1000 + pad + 1) - lo) // 8))
+
+    hb = hot_entity_cuts(df, "user_id", "ts", 86400, min_rows=600,
+                         buckets=8, cap=2)
+    assert hb.buckets == 8
+    assert list(hb.ents.items()) == [(3, cut(700, 3600)), (1, cut(600, 60))]
+    hb = hot_entity_cuts(df, "user_id", "ts", 86400, min_rows=600,
+                         buckets=8, cap=32)
+    assert list(hb.ents) == [3, 1, 2]
+    assert hb.ents[2] == cut(600, 600)
+    assert hot_entity_cuts(df, "user_id", "ts", 86400, min_rows=701) is None
+
+
+def test_jdiv_truncates_toward_zero():
+    """Spark-div arithmetic helper (pure python)."""
+    from aml_feature_store_spark.operators.windows import _jdiv
+
     # trunc-toward-zero vs floor: differs on negatives
     assert _jdiv(7, 2) == 3 and _jdiv(-7, 2) == -3 and (-7) // 2 == -4
     assert _jdiv(-86400001, 3600000) == -24
