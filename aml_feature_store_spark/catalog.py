@@ -52,7 +52,7 @@ CERTIFIED: dict[str, int] = {
     "top_orders_per_customer": 8,
     # "trailing_1h_features" invalidated r12: selectExpr-batched build (bit-equal pinned) — re-certify
     "windowed_gini_24h": 8,
-    "windowed_hhi_24h": 8,
+    # "windowed_hhi_24h" invalidated r13: router moved into windows.trailing_flag_counts — re-certify
     # r9-certified
     "behavioral_feature_vector": 9,
     "bloom_membership_validation": 9,
@@ -112,7 +112,7 @@ CERTIFIED: dict[str, int] = {
     "automl_asha_summary": 10,
     "basket_lift_pairs": 10,
     "batch_score_requests": 10,
-    "conditional_window_counts": 10,
+    # "conditional_window_counts" invalidated r13: router moved into windows.trailing_flag_counts — re-certify
     "dbscan_outliers_sliced": 10,
     "dedup_exact": 10,
     # "dedup_ngram_jaccard" invalidated r12: size-pruned jaccard_pairs_docs path (pinned vs generic) — re-certify
@@ -193,12 +193,12 @@ CERTIFIED: dict[str, int] = {
     "tfidf_top_terms": 11,
     "timestamp_functions": 11,
     # "trailing_multiwindow_features" invalidated r12: selectExpr-batched build (bit-equal pinned) — re-certify
-    "trailing_sums_cumsum_strategy": 11,
+    # "trailing_sums_cumsum_strategy" invalidated r13: now a pruned projection of trailing_features_scalable (trailing_sums_scalable deleted) — re-certify
     "unigram_logprob_quality": 11,
-    "unique_counts_windows": 11,
+    # "unique_counts_windows" invalidated r13: now trailing_features_auto projected to the distinct columns — re-certify
     "volume_shipping_q7": 11,
     "voting_ensemble_scores": 11,
-    "windowed_entropy_24h": 11,
+    # "windowed_entropy_24h" invalidated r13: router moved into windows.trailing_flag_counts — re-certify
 }
 
 # The driver's correctness gate checks the first DRIVER_CAP registered

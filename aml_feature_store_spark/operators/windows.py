@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from decimal import Decimal
 from functools import reduce
 from urllib.parse import urlparse
 
@@ -75,12 +76,13 @@ class HotBucketSpec:
     ``buckets`` fixed-width epoch-ms segments so the scalable trailing
     plan can parallelize a key that would otherwise serialize one task.
 
-    ``ents`` maps entity value → (lo_ms, width_ms). Bucket id is
+    ``ents`` maps entity value → (lo_ms, width_ms). An entity's bucket is
     ``clamp((ms - lo) div width, 0, buckets-1)`` — a deterministic
     monotone function of the row's order key, so equal timestamps always
     share a bucket (range-frame peers are never split) and every row of
     an earlier bucket sorts strictly below every row of a later one.
-    Entities not listed ride bucket 0 and are untouched."""
+    Entities not listed ride bucket 0 and are untouched (the plan's
+    global bucket id, see ``_bucket_expr``)."""
 
     buckets: int
     ents: dict
@@ -88,6 +90,11 @@ class HotBucketSpec:
 
 def _ms(ts_col: str) -> Column:
     return F.unix_millis(F.col(ts_col))
+
+
+def _q(name: str) -> str:
+    """Backtick-quoted column name for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def trailing_features(df: DataFrame, spec: TrailingWindowSpec) -> DataFrame:
@@ -111,14 +118,13 @@ def trailing_features(df: DataFrame, spec: TrailingWindowSpec) -> DataFrame:
     # fractional literals carry the D suffix so they stay DOUBLE — a
     # bare 0.02 parses as DECIMAL(2,2)).
     out = df.withColumn("_ts_ms", _ms(spec.ts_col))
-    q = lambda c: "`" + c.replace("`", "``") + "`"  # noqa: E731
-    amt = q(spec.amount_col)
+    amt = _q(spec.amount_col)
     amt_dec = f"CAST({amt} AS {DEC})"
     amt_sq_dec = f"CAST(({amt} * {amt}) AS {DEC4})"
     exprs = ["*"]
     for wname, wsecs in spec.windows.items():
         w = (
-            f"OVER (PARTITION BY {q(spec.entity_col)} ORDER BY _ts_ms "
+            f"OVER (PARTITION BY {_q(spec.entity_col)} ORDER BY _ts_ms "
             f"RANGE BETWEEN {wsecs * 1000} PRECEDING AND CURRENT ROW)"
         )
         n = f"count(1) {w}"
@@ -129,182 +135,43 @@ def trailing_features(df: DataFrame, spec: TrailingWindowSpec) -> DataFrame:
         var = f"greatest({s2} / {n} - {mean} * {mean}, 0.0D)"
         vel = repr(wsecs / spec.velocity_unit_s)
         exprs += [
-            f"{n} AS {q(f'txn_count_{wname}')}",
-            f"{s} AS {q(f'txn_amount_sum_{wname}')}",
-            f"{mean} AS {q(f'avg_txn_amount_{wname}')}",
-            f"max({amt}) {w} AS {q(f'max_txn_amount_{wname}')}",
-            f"min({amt}) {w} AS {q(f'min_txn_amount_{wname}')}",
-            f"round(sqrt({var}), 6) AS {q(f'std_txn_amount_{wname}')}",
-            f"CAST({n} AS DOUBLE) / {vel}D AS {q(f'velocity_score_{wname}')}",
+            f"{n} AS {_q(f'txn_count_{wname}')}",
+            f"{s} AS {_q(f'txn_amount_sum_{wname}')}",
+            f"{mean} AS {_q(f'avg_txn_amount_{wname}')}",
+            f"max({amt}) {w} AS {_q(f'max_txn_amount_{wname}')}",
+            f"min({amt}) {w} AS {_q(f'min_txn_amount_{wname}')}",
+            f"round(sqrt({var}), 6) AS {_q(f'std_txn_amount_{wname}')}",
+            f"CAST({n} AS DOUBLE) / {vel}D AS {_q(f'velocity_score_{wname}')}",
         ]
         for dcol in spec.distinct_cols:
             if spec.distinct_exact:
-                dexpr = f"CAST(size(collect_set({q(dcol)}) {w}) AS BIGINT)"
+                dexpr = f"CAST(size(collect_set({_q(dcol)}) {w}) AS BIGINT)"
             else:
-                dexpr = f"approx_count_distinct({q(dcol)}, 0.02D) {w}"
-            exprs.append(f"{dexpr} AS {q(f'unique_{dcol}_{wname}')}")
+                dexpr = f"approx_count_distinct({_q(dcol)}, 0.02D) {w}"
+            exprs.append(f"{dexpr} AS {_q(f'unique_{dcol}_{wname}')}")
     return out.selectExpr(*exprs).drop("_ts_ms")
 
 
-def trailing_sums_scalable(
-    df: DataFrame,
-    spec: TrailingWindowSpec,
-    hot_buckets: HotBucketSpec | None = None,
-) -> DataFrame:
-    """Big-frame strategy for the invertible window aggregates
-    (count/sum/avg/velocity): cumulative sums + shadow probes.
-
-    Spark's WindowExec recomputes sliding-frame aggregates per row —
-    O(rows × frame). For wide windows on hot keys (24 h × thousands of
-    events) that dominates. This strategy is O(rows) regardless of frame
-    width:
-
-      sum[t−W, t] = cum(t) − cum(t−W−1ms)
-
-    computed with ONE unbounded-preceding range frame (incrementally
-    maintained by Spark) over the events unioned with one "shadow" probe
-    row per (event, window) at ts−W−1ms, then a join to reattach each
-    event's probe values. Decimal accumulation keeps the subtraction
-    exact, so results are bit-identical to :func:`trailing_features` for
-    the covered metrics (non-invertible min/max/std stay on the
-    frame-based operator).
-    Reference semantics: same per-event trailing windows
-    (flink_job/real_time_processor.py:153-210).
-
-    ``hot_buckets``: same hot-entity time-bucketization as
-    :func:`trailing_features_scalable` — the cumulative sums partition
-    by (entity, bucket) and add their literal bucket-prefix carry, so a
-    key owning a large share of the log no longer serializes one task.
-    Only the sums carry applies here (no extrema machinery);
-    bit-equivalence is pytest-pinned.
-    """
-    ms = _ms(spec.ts_col)
-    base = df.select(
-        F.col(spec.entity_col).alias("_ent"),
-        F.col("event_id"),
-        ms.alias("_ms"),
-        F.col(spec.amount_col).alias("_amt"),
-    )
-    real = base.select(
-        "_ent", "event_id", "_ms", "_amt", F.lit(None).cast("string").alias("_win")
-    )
-    # probe _amt nulls carry the amount column's own type: a hardcoded
-    # double here would coerce the whole union (and so every extremum /
-    # sum input) to double for decimal amounts
-    amt_t = dict(base.dtypes)["_amt"]
-    shadows = None
-    for wname, wsecs in spec.windows.items():
-        s = base.select(
-            "_ent",
-            "event_id",
-            (F.col("_ms") - F.lit(wsecs * 1000 + 1)).alias("_ms"),
-            F.lit(None).cast(amt_t).alias("_amt"),
-            F.lit(wname).alias("_win"),
-        )
-        shadows = s if shadows is None else shadows.unionByName(s)
-    u = real.unionByName(shadows)
-    bucketized = hot_buckets is not None and bool(hot_buckets.ents)
-    if bucketized:
-        carry = _hot_carry_literals(df, spec, hot_buckets)
-        u = u.withColumn("_b", _bucket_expr(hot_buckets))
-        w = (
-            Window.partitionBy("_ent", "_b")
-            .orderBy("_ms")
-            .rangeBetween(Window.unboundedPreceding, 0)
-        )
-    else:
-        w = (
-            Window.partitionBy("_ent")
-            .orderBy("_ms")
-            .rangeBetween(Window.unboundedPreceding, 0)
-        )
-    amt_dec = F.when(F.col("_win").isNull(), F.col("_amt")).cast(DEC)
-    cnt_flag = F.when(F.col("_win").isNull(), 1).otherwise(0)
-    cs: Column = F.sum(amt_dec).over(w)
-    cn: Column = F.sum(cnt_flag).over(w)
-    if bucketized:
-        # stitch the bucket-prefix carry (coalesced — every downstream
-        # read of _cum_s already coalesces empty frames to 0)
-        cy_s, cy_n, _ = _carry_sum_exprs(hot_buckets, carry)
-        cs = F.coalesce(cs, F.lit(0).cast(_SUM_T)) + cy_s
-        cn = cn + cy_n
-    cum = u.select(
-        "_ent",
-        "event_id",
-        "_win",
-        cs.alias("_cum_s"),
-        cn.alias("_cum_n"),
-    )
-    # reattach each event's probe values by PIVOTING the (1 real + W probe)
-    # rows of each event into one row with a grouped aggregation on
-    # (_ent, event_id). The window's hashpartitioning(_ent) already
-    # satisfies the aggregation's clustering requirement, so this adds NO
-    # shuffle — the whole strategy is one Exchange + one Sort end-to-end
-    # (a per-window join on event_id would re-shuffle the table W times).
-    agg_exprs = [
-        F.max(F.when(F.col("_win").isNull(), F.col("_cum_s"))).alias("_at_s"),
-        F.max(F.when(F.col("_win").isNull(), F.col("_cum_n"))).alias("_at_n"),
-    ]
-    for wname in spec.windows:
-        agg_exprs += [
-            F.max(
-                F.when(
-                    F.col("_win") == wname,
-                    F.coalesce(F.col("_cum_s"), F.lit(0).cast(DEC)),
-                )
-            ).alias(f"_bs_{wname}"),
-            F.max(F.when(F.col("_win") == wname, F.col("_cum_n"))).alias(
-                f"_bn_{wname}"
-            ),
-        ]
-    out = cum.groupBy("_ent", "event_id").agg(*agg_exprs)
-    for wname, wsecs in spec.windows.items():
-        n = F.col("_at_n") - F.col(f"_bn_{wname}")
-        s = (
-            F.coalesce(F.col("_at_s"), F.lit(0).cast(DEC))
-            - F.col(f"_bs_{wname}")
-        ).cast("double")
-        out = out.withColumns(
-            {
-                f"txn_count_{wname}": n,
-                f"txn_amount_sum_{wname}": s,
-                f"avg_txn_amount_{wname}": s / n,
-                f"velocity_score_{wname}": n.cast("double")
-                / F.lit(wsecs / spec.velocity_unit_s),
-            }
-        )
-    keep = [F.col("_ent").alias(spec.entity_col), "event_id"] + [
-        c
-        for wname in spec.windows
-        for c in (
-            f"txn_count_{wname}",
-            f"txn_amount_sum_{wname}",
-            f"avg_txn_amount_{wname}",
-            f"velocity_score_{wname}",
-        )
-    ]
-    return out.select(*keep)
-
-
 def _bucket_expr(hb: HotBucketSpec) -> Column:
-    """``_b`` column: ``clamp((_ms - lo) div width, 0, buckets-1)`` per
-    hot entity, 0 for everything else — deterministic and monotone in
-    the order key, so equal timestamps always co-bucket."""
+    """``_b`` column, the GLOBAL bucket id: ``1 + i·buckets +
+    clamp((_ms - lo) div width, 0, buckets-1)`` for the i-th hot entity
+    of ``hb.ents``, 0 for every other row (a NULL key never equals a
+    literal, so it rides 0 too). Deterministic and monotone in the order
+    key within an entity, so equal timestamps always co-bucket; and one
+    id names one (entity, bucket), so every carry is a plain array
+    lookup by ``_b`` with no CASE over the entities.
+
+    The entity match is the only per-entity Column (one ``F.lit`` each):
+    entity values never pass through SQL text, where a string such as
+    ``${x}`` would meet the parser's variable substitution."""
     nb = hb.buckets
-    return reduce(
-        lambda acc, item: F.when(
-            F.col("_ent") == F.lit(item[0]),
-            F.greatest(
-                F.lit(0),
-                F.least(
-                    F.lit(nb - 1),
-                    F.expr(f"(_ms - {item[1][0]}L) div {item[1][1]}L"),
-                ),
-            ).cast("int"),
-        ).otherwise(acc),
-        hb.ents.items(),
-        F.lit(0),
-    )
+    b = F.lit(0)
+    for i, (e, (lo, width)) in enumerate(hb.ents.items()):
+        local = f"greatest(0, least({nb - 1}, (_ms - {lo}L) div {width}L))"
+        b = F.when(
+            F.col("_ent") == F.lit(e), F.expr(f"CAST({1 + i * nb} + {local} AS INT)")
+        ).otherwise(b)
+    return b
 
 
 def _files_sig(df: DataFrame) -> tuple:
@@ -352,9 +219,8 @@ def _hot_carry_literals(
     by construction: per hot entity, ``buckets`` running sums plus, per
     window, the extrema of the single chunk crossing each bucket edge
     (a chunk is an interval, so exactly one chunk contains any given
-    edge). The collect is ≤ (hot entities × buckets × chunks of the
-    narrowest window intersected per bucket) rows — at warehouse scale
-    cap the span/window ratio or raise ``buckets`` width, never
+    edge). The collect is ≤ hot entities × buckets rows — at warehouse
+    scale cap the span/window ratio or raise ``buckets`` width, never
     unbounded in the table size.
 
     Exactness: DECIMAL sums are folded with ``decimal.Decimal`` (exact,
@@ -362,18 +228,19 @@ def _hot_carry_literals(
     extrema are IEEE doubles compared with Python ``max``/``min``
     (NaN-free domain — the operator's amount column contract).
 
-    Returns ``{ent: {"s"/"n"/"s2": exclusive-prefix arrays[buckets],
-    "mk": {tag: arrays}, "ext": {window: (ck_lo, ck_hi, px, pn, sx, sn)
-    arrays — the edge-chunk ids and the carry extrema that apply iff the
-    row's chunk equals that edge chunk}}}`` plus ``"__amt_t"``, the
-    amount column's Spark type (the stitch builds its extrema literal
-    arrays in that type so a decimal amount never coerces to double).
+    Returns lists indexed by the global bucket id ``_b`` of
+    :func:`_bucket_expr` (index 0, every non-hot row, carries 0 / NULL):
+    ``{"s"/"n"/"s2": exclusive bucket-prefix sums, "mk": {tag: marker
+    prefix}, "ext": {window: (ck_lo, ck_hi, px, pn, sx, sn)} — the
+    bucket's lower/upper edge-chunk ids and the carry extrema that apply
+    iff the row's chunk equals that edge chunk}`` plus ``"amt_t"``, the
+    amount column's Spark type (the stitch types its extrema arrays with
+    it so a decimal amount never coerces to double).
 
-    Collect bound (r11, VERDICT/ADVICE): the aggregate groups by
-    (entity, bucket) ONLY — ≤ cap × buckets rows regardless of the
-    span/window ratio. Extrema ride conditional aggregates restricted to
-    the chunk containing the row's own bucket's lower/upper edge (both
-    edge-chunk ids are row-level expressions of ``_b``); the driver fold
+    Collect bound (r11, VERDICT/ADVICE): the aggregate groups by the
+    bucket ONLY — ≤ cap × buckets rows regardless of the span/window
+    ratio. Extrema ride conditional aggregates restricted to the chunk
+    containing the row's own bucket's lower/upper edge; the driver fold
     re-attributes them across buckets: rows of bucket b' < b inside
     chunk ck_lo(b) are exactly the rows of the own-upper-edge aggregate
     of b' when ck_hi(b') == ck_lo(b) (a chunk is an interval — holding a
@@ -382,53 +249,100 @@ def _hot_carry_literals(
     variant grouped by every window's chunk id jointly, whose group
     count was span/narrowest-window per entity — unbounded in the span,
     a driver OOM risk at exactly the scale this machinery targets."""
-    from decimal import Decimal
-
     nb = hb.buckets
-    hot_ids = list(hb.ents)
-    ms = _ms(spec.ts_col)
+    n_ent = len(hb.ents)
+    size = 1 + n_ent * nb
+    ent_buckets = [range(1 + i * nb, 1 + (i + 1) * nb) for i in range(n_ent)]
+    # edge-chunk ids per global bucket; _jdiv, not //: must match the
+    # plan's `div` (trunc-to-zero)
+    edges = {}
+    for wname, wsecs in spec.windows.items():
+        wms_ = wsecs * 1000
+        ck_lo: list = [None]
+        ck_hi: list = [None]
+        for lo, width in hb.ents.values():
+            ck_lo += [_jdiv(lo + b * width, wms_) for b in range(nb)]
+            ck_hi += [_jdiv(lo + (b + 1) * width, wms_) for b in range(nb)]
+        edges[wname] = (ck_lo, ck_hi)
     base = (
-        df.filter(F.col(spec.entity_col).isin(hot_ids))
+        df.filter(F.col(spec.entity_col).isin(list(hb.ents)))
         .select(
             F.col(spec.entity_col).alias("_ent"),
             F.col("event_id"),
-            ms.alias("_ms"),
+            _ms(spec.ts_col).alias("_ms"),
             F.col(spec.amount_col).alias("_amt"),
             *[F.col(d).alias(f"_v_{d}") for d in spec.distinct_cols],
         )
         .withColumn("_b", _bucket_expr(hb))
-        .withColumn(
-            "_lo",
-            _carry_case(
-                hb, lambda e: F.lit(hb.ents[e][0]).cast("long"), F.lit(0).cast("long")
-            ),
-        )
-        .withColumn(
-            "_w",
-            _carry_case(
-                hb, lambda e: F.lit(hb.ents[e][1]).cast("long"), F.lit(1).cast("long")
-            ),
-        )
     )
     amt_t = dict(base.dtypes)["_amt"]
+    edge_amt = {}
+    for wname, wsecs in spec.windows.items():
+        ck = f"_ms div {wsecs * 1000}"
+        for side, arr in zip(("l", "h"), edges[wname]):
+            edge_amt[f"_{side}a_{wname}"] = F.expr(
+                f"CASE WHEN {ck} = {_at_bucket(arr, 'bigint')} THEN _amt END"
+            )
     agg_exprs = [
         F.sum(F.col("_amt").cast(DEC)).alias("_s"),
         F.count(F.lit(1)).alias("_n"),
         F.sum((F.col("_amt") * F.col("_amt")).cast(DEC4)).alias("_s2"),
     ]
-    for wname, wsecs in spec.windows.items():
-        wms_ = wsecs * 1000
-        ck = F.expr(f"_ms div {wms_}")
-        ck_lo_b = F.expr(f"(_lo + _b * _w) div {wms_}")
-        ck_hi_b = F.expr(f"(_lo + (_b + 1) * _w) div {wms_}")
+    for wname in spec.windows:
         agg_exprs += [
-            F.max(F.when(ck == ck_lo_b, F.col("_amt"))).alias(f"_lx_{wname}"),
-            F.min(F.when(ck == ck_lo_b, F.col("_amt"))).alias(f"_ln_{wname}"),
-            F.max(F.when(ck == ck_hi_b, F.col("_amt"))).alias(f"_hx_{wname}"),
-            F.min(F.when(ck == ck_hi_b, F.col("_amt"))).alias(f"_hn_{wname}"),
+            F.max(f"_la_{wname}").alias(f"_lx_{wname}"),
+            F.min(f"_la_{wname}").alias(f"_ln_{wname}"),
+            F.max(f"_ha_{wname}").alias(f"_hx_{wname}"),
+            F.min(f"_ha_{wname}").alias(f"_hn_{wname}"),
         ]
-    grouped = base.groupBy("_ent", "_b").agg(*agg_exprs).collect()
-    mrows = []
+    grouped = {
+        r["_b"]: r
+        for r in base.withColumns(edge_amt).groupBy("_b").agg(*agg_exprs).collect()
+    }
+    s_arr: list = [Decimal(0)]
+    n_arr: list = [0]
+    s2_arr: list = [Decimal(0)]
+    for bs in ent_buckets:
+        rs, rn, r2 = Decimal(0), 0, Decimal(0)
+        for b in bs:
+            s_arr.append(rs)
+            n_arr.append(rn)
+            s2_arr.append(r2)
+            r = grouped.get(b)
+            if r is not None:
+                if r["_s"] is not None:
+                    rs += r["_s"]
+                rn += r["_n"]
+                if r["_s2"] is not None:
+                    r2 += r["_s2"]
+
+    def extreme(pick, rows, key):
+        vals = [r[key] for r in rows if r[key] is not None]
+        return pick(vals) if vals else None
+
+    ext = {}
+    for wname in spec.windows:
+        ck_lo, ck_hi = edges[wname]
+        px: list = [None] * size
+        pn: list = [None] * size
+        sx: list = [None] * size
+        sn: list = [None] * size
+        for bs in ent_buckets:
+            for b in bs:
+                before = [
+                    grouped[b2] for b2 in bs
+                    if b2 < b and b2 in grouped and ck_hi[b2] == ck_lo[b]
+                ]
+                after = [
+                    grouped[b2] for b2 in bs
+                    if b2 > b and b2 in grouped and ck_lo[b2] == ck_hi[b]
+                ]
+                px[b] = extreme(max, before, f"_hx_{wname}")
+                pn[b] = extreme(min, before, f"_hn_{wname}")
+                sx[b] = extreme(max, after, f"_lx_{wname}")
+                sn[b] = extreme(min, after, f"_ln_{wname}")
+        ext[wname] = (ck_lo, ck_hi, px, pn, sx, sn)
+    mk: dict[str, list] = {}
     if spec.distinct_cols:
         legs = []
         for d in spec.distinct_cols:
@@ -467,93 +381,26 @@ def _hot_carry_literals(
                 )
             )
         mall = reduce(lambda a, b: a.unionByName(b), legs)
-        mrows = (
-            mall.withColumn("_b", _bucket_expr(hb))
-            .groupBy("_ent", "_b", "_mtag")
+        per = {
+            (r["_b"], r["_mtag"]): r["_mv"]
+            for r in mall.withColumn("_b", _bucket_expr(hb))
+            .groupBy("_b", "_mtag")
             .agg(F.sum("_mval").alias("_mv"))
             .collect()
-        )
-    out = {}
-    for ent, (lo, width) in hb.ents.items():
-        rows = [r for r in grouped if r["_ent"] == ent]
-        sums: dict[int, list] = {}
-        for r in rows:
-            acc = sums.setdefault(r["_b"], [Decimal(0), 0, Decimal(0)])
-            if r["_s"] is not None:
-                acc[0] += r["_s"]
-            acc[1] += r["_n"]
-            if r["_s2"] is not None:
-                acc[2] += r["_s2"]
-        s_arr: list = []
-        n_arr: list = []
-        s2_arr: list = []
-        rs, rn, r2 = Decimal(0), 0, Decimal(0)
-        for b in range(nb):
-            s_arr.append(rs)
-            n_arr.append(rn)
-            s2_arr.append(r2)
-            if b in sums:
-                rs += sums[b][0]
-                rn += sums[b][1]
-                r2 += sums[b][2]
-        ext = {}
-        for wname, wsecs in spec.windows.items():
-            wms_ = wsecs * 1000
-            # _jdiv, not //: must match the plan's `div` (trunc-to-zero)
-            ck_lo = [_jdiv(lo + b * width, wms_) for b in range(nb)]
-            ck_hi = [_jdiv(lo + (b + 1) * width, wms_) for b in range(nb)]
-            lx = {r["_b"]: r[f"_lx_{wname}"] for r in rows}
-            ln = {r["_b"]: r[f"_ln_{wname}"] for r in rows}
-            hx = {r["_b"]: r[f"_hx_{wname}"] for r in rows}
-            hn = {r["_b"]: r[f"_hn_{wname}"] for r in rows}
-            px: list = [None] * nb
-            pn: list = [None] * nb
-            sx: list = [None] * nb
-            sn: list = [None] * nb
-            for b in range(nb):
-                prev_e = [
-                    hx[b2]
-                    for b2 in range(b)
-                    if ck_hi[b2] == ck_lo[b] and hx.get(b2) is not None
-                ]
-                if prev_e:
-                    px[b] = max(prev_e)
-                    pn[b] = min(
-                        hn[b2]
-                        for b2 in range(b)
-                        if ck_hi[b2] == ck_lo[b] and hn.get(b2) is not None
-                    )
-                post_e = [
-                    lx[b2]
-                    for b2 in range(b + 1, nb)
-                    if ck_lo[b2] == ck_hi[b] and lx.get(b2) is not None
-                ]
-                if post_e:
-                    sx[b] = max(post_e)
-                    sn[b] = min(
-                        ln[b2]
-                        for b2 in range(b + 1, nb)
-                        if ck_lo[b2] == ck_hi[b] and ln.get(b2) is not None
-                    )
-            ext[wname] = (ck_lo, ck_hi, px, pn, sx, sn)
-        mk: dict[str, list] = {}
+        }
         for wname in spec.windows:
             for d in spec.distinct_cols:
                 tag = f"{wname}::{d}"
-                per_b = {
-                    r["_b"]: r["_mv"]
-                    for r in mrows
-                    if r["_ent"] == ent and r["_mtag"] == tag
-                }
-                arr: list = []
-                run = 0
-                for b in range(nb):
-                    arr.append(run)
-                    run += per_b.get(b, 0) or 0
+                arr: list = [0]
+                for bs in ent_buckets:
+                    run = 0
+                    for b in bs:
+                        arr.append(run)
+                        run += per.get((b, tag)) or 0
                 mk[tag] = arr
-        out[ent] = {"s": s_arr, "n": n_arr, "s2": s2_arr, "ext": ext, "mk": mk}
-    out["__amt_t"] = amt_t
-    return out
+    return {
+        "s": s_arr, "n": n_arr, "s2": s2_arr, "ext": ext, "mk": mk, "amt_t": amt_t,
+    }
 
 
 # stitched-sum literal types: one sum-aggregate step above DEC/DEC4
@@ -561,118 +408,67 @@ _SUM_T = "decimal(35,2)"
 _SUM2_T = "decimal(38,4)"
 
 
-def _carry_case(hb: HotBucketSpec, builder, default) -> Column:
-    """CASE over the hot entities: ``builder(ent)`` for each, else
-    ``default`` (what every non-hot row gets)."""
-    return reduce(
-        lambda acc, e: F.when(F.col("_ent") == F.lit(e), builder(e)).otherwise(acc),
-        list(hb.ents),
-        default,
+def _at_bucket(vals: list, t: str) -> str:
+    """``vals[_b]`` as SQL text: one string literal split and cast to
+    ``array<t>``, looked up by the global bucket id. It parses to three
+    nodes that constant-fold into ONE array Literal, so neither the
+    build (no py4j round-trip per element, as ``F.lit(list)`` makes) nor
+    Catalyst (no per-element child) pays per bucket. Casts are exact:
+    Decimal text, ints, and the shortest round-tripping double repr;
+    an empty field is NULL (``try_cast``; every other field is valid
+    by construction)."""
+    text = ",".join(
+        "" if v is None
+        else format(v, "f") if isinstance(v, Decimal)
+        else repr(v) if isinstance(v, float)
+        else str(int(v))
+        for v in vals
     )
-
-
-def _dec_arr(vals, t) -> Column:
-    """One ARRAY literal of exact decimals (single Literal node — an
-    F.array of N lit().cast() children costs real Catalyst time per
-    plan build at N=buckets × ~15 arrays). Values are ≤2/4 dp, so the
-    inferred decimal(38,18) literal casts to the sum type exactly."""
-    from decimal import Decimal
-
-    return F.lit([Decimal(str(v)) for v in vals]).cast(f"array<{t}>")
-
-
-def _num_arr(vals, t) -> Column:
-    """One ARRAY literal of ints/doubles; an all-None extrema carry
-    column degrades to a NULL array (element_at(null, i) is null — the
-    same no-carry semantics)."""
-    vals = list(vals)
-    if all(v is None for v in vals):
-        return F.lit(None).cast(f"array<{t}>")
-    return F.lit(vals).cast(f"array<{t}>")
-
-
-def _carry_sum_exprs(hb: HotBucketSpec, carry: dict) -> tuple[Column, Column, Column]:
-    """The (sum, count, sum-of-squares) bucket-prefix carries as literal
-    array lookups by ``_b`` — shared by both cum+probe strategies."""
-    bidx = F.col("_b") + 1
-    dec_arr, num_arr = _dec_arr, _num_arr
-
-    cy_s = _carry_case(
-        hb,
-        lambda e: F.element_at(dec_arr(carry[e]["s"], _SUM_T), bidx),
-        F.lit(0).cast(_SUM_T),
-    )
-    cy_n = _carry_case(
-        hb,
-        lambda e: F.element_at(num_arr(carry[e]["n"], "long"), bidx),
-        F.lit(0).cast("long"),
-    )
-    cy_s2 = _carry_case(
-        hb,
-        lambda e: F.element_at(dec_arr(carry[e]["s2"], _SUM2_T), bidx),
-        F.lit(0).cast(_SUM2_T),
-    )
-    return cy_s, cy_n, cy_s2
+    return f"element_at(try_cast(split('{text}', ',') AS array<{t}>), _b + 1)"
 
 
 def _stitch_exprs(
     spec: TrailingWindowSpec,
-    hb: HotBucketSpec,
     carry: dict,
     tags: list[tuple[str, str]],
 ) -> dict[str, Column]:
-    """Global-stitch expressions for the bucketized plan: sums add their
-    exclusive bucket-prefix (literal array lookup by ``_b``; 0 for
-    non-hot rows — every downstream read of these columns already
-    coalesces empty frames to 0, so the null→0 degrade is
-    value-identical); extrema take the null-skipping ``greatest/least``
-    of (local, carry), where the carry applies only when the row's chunk
-    is the bucket-edge chunk."""
-    bidx = F.col("_b") + 1
-    # extrema literals in the amount column's own type — a double-typed
-    # carry under a decimal amount would coerce the bucketized plan's
-    # max/min to double, diverging from the unbucketized plan's type
-    amt_t = carry.get("__amt_t", "double")
-
-    def case_over(builder, default):
-        return _carry_case(hb, builder, default)
-
-    num_arr = _num_arr
-    zs = F.lit(0).cast(_SUM_T)
-    z2 = F.lit(0).cast(_SUM2_T)
-    cy_s, cy_n, cy_s2 = _carry_sum_exprs(hb, carry)
-    glob = {
-        "_cs_i": F.coalesce(F.col("_cs_i"), zs) + cy_s,
-        "_cn_i": F.col("_cn_i") + cy_n,
-        "_c2_i": F.coalesce(F.col("_c2_i"), z2) + cy_s2,
-        "_cs_e": F.coalesce(F.col("_cs_e"), zs) + cy_s,
-        "_cn_e": F.col("_cn_e") + cy_n,
-        "_c2_e": F.coalesce(F.col("_c2_e"), z2) + cy_s2,
-    }
+    """Global-stitch expressions for the bucketized plan, one SQL-text
+    expression per stitched column: sums add their exclusive
+    bucket-prefix (array lookup by ``_b``; 0 for non-hot rows — every
+    downstream read of these columns already coalesces empty frames to
+    0, so the null→0 degrade is value-identical); extrema take the
+    null-skipping ``greatest/least`` of (local, carry), where the carry
+    applies only when the row's chunk is the bucket-edge chunk. An
+    extremum column with no carry in any bucket is left as it is
+    (``greatest(x, NULL)`` is ``x``)."""
+    cy_s = _at_bucket(carry["s"], _SUM_T)
+    cy_n = _at_bucket(carry["n"], "bigint")
+    cy_s2 = _at_bucket(carry["s2"], _SUM2_T)
+    glob = {}
+    for end in ("i", "e"):
+        glob[f"_cs_{end}"] = f"coalesce(_cs_{end}, CAST(0 AS {_SUM_T})) + {cy_s}"
+        glob[f"_cn_{end}"] = f"_cn_{end} + {cy_n}"
+        glob[f"_c2_{end}"] = f"coalesce(_c2_{end}, CAST(0 AS {_SUM2_T})) + {cy_s2}"
     for wname, d in tags:
-        tag = f"{wname}::{d}"
-        glob[f"_cd_{wname}_{d}"] = F.col(f"_cd_{wname}_{d}") + case_over(
-            lambda e, t=tag: F.element_at(num_arr(carry[e]["mk"][t], "long"), bidx),
-            F.lit(0).cast("long"),
-        )
+        col = f"_cd_{wname}_{d}"
+        glob[col] = f"{_q(col)} + {_at_bucket(carry['mk'][f'{wname}::{d}'], 'bigint')}"
+    amt_t = carry["amt_t"]
     for wname, wsecs in spec.windows.items():
-        ckw = F.expr(f"_ms div {wsecs * 1000}")
-
-        def ext_case(iv, ic, w=wname):
-            return case_over(
-                lambda e, w=w, iv=iv, ic=ic: F.when(
-                    ckw
-                    == F.element_at(num_arr(carry[e]["ext"][w][ic], "long"), bidx),
-                    F.element_at(num_arr(carry[e]["ext"][w][iv], amt_t), bidx),
-                ),
-                F.lit(None).cast(amt_t),
+        ck_lo, ck_hi, px, pn, sx, sn = carry["ext"][wname]
+        for col, fn, edge, vals in (
+            (f"_pmx_{wname}", "greatest", ck_lo, px),
+            (f"_pmn_{wname}", "least", ck_lo, pn),
+            (f"_smx_{wname}", "greatest", ck_hi, sx),
+            (f"_smn_{wname}", "least", ck_hi, sn),
+        ):
+            if all(v is None for v in vals):
+                continue
+            at_edge = f"_ms div {wsecs * 1000} = {_at_bucket(edge, 'bigint')}"
+            glob[col] = (
+                f"{fn}({_q(col)}, "
+                f"CASE WHEN {at_edge} THEN {_at_bucket(vals, amt_t)} END)"
             )
-
-        glob[f"_pmx_{wname}"] = F.greatest(F.col(f"_pmx_{wname}"), ext_case(2, 0))
-        glob[f"_pmn_{wname}"] = F.least(F.col(f"_pmn_{wname}"), ext_case(3, 0))
-        glob[f"_smx_{wname}"] = F.greatest(F.col(f"_smx_{wname}"), ext_case(4, 1))
-        glob[f"_smn_{wname}"] = F.least(F.col(f"_smn_{wname}"), ext_case(5, 1))
-    return glob
+    return {c: F.expr(e) for c, e in glob.items()}
 
 
 def trailing_features_scalable(
@@ -726,7 +522,10 @@ def trailing_features_scalable(
     plus per window the one chunk that crosses each bucket edge — so it
     is computed ONCE at plan build by a driver-side fold over one
     hot-filtered aggregate and stitched back as LITERAL array lookups
-    keyed by the bucket id:
+    keyed by the global bucket id (one id per (entity, bucket), so no
+    CASE over the entities). The stitch ships as SQL text, one
+    expression per column, so the build's py4j work is flat in the
+    bucket count:
 
     - cumulative sums/counts/markers: ``local + exclusive_prefix[b]``
       (exact ``decimal.Decimal``/int addition on the driver — DECIMAL
@@ -785,7 +584,9 @@ def trailing_features_scalable(
         F.lit(None).cast("string").alias("_mtag"),
         F.lit(0).alias("_mval"),
     )
-    # see trailing_sums_scalable: probe nulls in the amount's own type
+    # probe _amt nulls carry the amount column's own type: a hardcoded
+    # double here would coerce the whole union (and so every extremum /
+    # sum input) to double for decimal amounts
     amt_t = dict(base.dtypes)["_amt"]
     shadows = None
     for wname, wsecs in spec.windows.items():
@@ -888,7 +689,7 @@ def trailing_features_scalable(
         cols[f"_smn_{wname}"] = F.min("_amt").over(desc)
     cum = u.withColumns(cols)
     if bucketized:
-        cum = cum.withColumns(_stitch_exprs(spec, hot_buckets, carry, tags))
+        cum = cum.withColumns(_stitch_exprs(spec, carry, tags))
     cum = cum.filter(F.col("_win").isNull() | (F.col("_win") != "__mk"))
 
     isreal = F.col("_win").isNull()
@@ -965,67 +766,6 @@ def trailing_features_scalable(
         )
     ]
     return out.select(*keep)
-
-
-def trailing_flag_counts_scalable(
-    df: DataFrame,
-    flags: dict[str, Column],
-    window_s: int,
-    entity_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """O(rows) trailing counts of arbitrary boolean flag expressions (plus
-    the total count) over one window — the cum+probe strategy specialized
-    to integer indicator sums (conditional counts are invertible, so no
-    extrema machinery is needed). Returns (id, entity, cnt, <flag>... )
-    with ``cnt`` the frame row count and each flag column its conditional
-    count. Bit-identical to the range-frame formulation.
-    """
-    ms = _ms(ts_col)
-    names = list(flags)
-    base = df.select(
-        F.col(entity_col).alias("_ent"),
-        F.col(id_col).alias("_id"),
-        ms.alias("_ms"),
-        F.lit(1).alias("_one"),
-        *[flags[n].cast("int").alias(f"_f_{n}") for n in names],
-    )
-    real = base.withColumn("_probe", F.lit(0))
-    probe = base.select(
-        "_ent",
-        "_id",
-        (F.col("_ms") - F.lit(window_s * 1000)).alias("_ms"),
-        F.lit(0).alias("_one"),
-        *[F.lit(0).alias(f"_f_{n}") for n in names],
-    ).withColumn("_probe", F.lit(1))
-    u = real.unionByName(probe).repartition("_ent")
-    wcum = Window.partitionBy("_ent").orderBy("_ms")
-    incl = wcum.rangeBetween(Window.unboundedPreceding, 0)
-    excl = wcum.rangeBetween(Window.unboundedPreceding, -1)
-    metrics = ["_one"] + [f"_f_{n}" for n in names]
-    cum = u.withColumns(
-        {
-            **{f"_ci{c}": F.sum(c).over(incl) for c in metrics},
-            **{
-                f"_ce{c}": F.coalesce(F.sum(c).over(excl), F.lit(0))
-                for c in metrics
-            },
-        }
-    )
-    is_real = F.col("_probe") == 0
-    agg = cum.groupBy("_ent", "_id").agg(
-        *[F.max(F.when(is_real, F.col(f"_ci{c}"))).alias(f"_at{c}") for c in metrics],
-        *[F.max(F.when(~is_real, F.col(f"_ce{c}"))).alias(f"_b{c}") for c in metrics],
-    )
-    out_cols = {"cnt": F.col("_at_one") - F.col("_b_one")}
-    for n in names:
-        out_cols[n] = F.col(f"_at_f_{n}") - F.col(f"_b_f_{n}")
-    return agg.select(
-        F.col("_id").alias(id_col),
-        F.col("_ent").alias(entity_col),
-        *[c.alias(n) for n, c in out_cols.items()],
-    )
 
 
 # frame density (estimated rows per widest frame) above which the O(rows)
@@ -1210,7 +950,7 @@ def estimate_frame_rows(
 def trailing_features_auto(
     df: DataFrame,
     spec: TrailingWindowSpec,
-    frame_rows_threshold: int = AUTO_FRAME_ROWS_THRESHOLD,
+    frame_rows_threshold: int | None = None,
     hot_rows_threshold: int = HOT_TASK_ROWS_THRESHOLD,
 ) -> DataFrame:
     """Adaptive physical strategy for the trailing-window operator: one
@@ -1230,9 +970,14 @@ def trailing_features_auto(
     task (``hot_rows_threshold``); on the scalable path those are
     time-bucketized so their windows parallelize across the cluster —
     see ``trailing_features_scalable(hot_buckets=...)``.
+
+    ``frame_rows_threshold`` defaults to ``AUTO_FRAME_ROWS_THRESHOLD``,
+    read at call time (the constant every density router shares).
     """
     if spec.distinct_cols and not spec.distinct_exact:
         return trailing_features(df, spec)
+    if frame_rows_threshold is None:
+        frame_rows_threshold = AUTO_FRAME_ROWS_THRESHOLD
     w = max(spec.windows.values())
     est, hot = _entity_stats(
         df, spec.entity_col, spec.ts_col, w, min_rows=hot_rows_threshold
@@ -1241,6 +986,88 @@ def trailing_features_auto(
         return trailing_features(df, spec)
     return trailing_features_scalable(
         df, spec, hot_buckets=_hot_spec(hot, w, HOT_BUCKETS)
+    )
+
+
+def trailing_flag_counts(
+    df: DataFrame,
+    flags: dict[str, Column],
+    window_s: int,
+    entity_col: str = "user_id",
+    ts_col: str = "ts",
+    id_col: str = "event_id",
+) -> DataFrame:
+    """Trailing counts of arbitrary boolean flag expressions (plus the
+    total count) over one window. Returns (id, entity, cnt, <flag>...)
+    with ``cnt`` the frame row count and each flag column its
+    conditional count.
+
+    The density router picks the plan, like :func:`trailing_features_auto`
+    (densest entity's frame rows vs ``AUTO_FRAME_ROWS_THRESHOLD``, read
+    at call time); both plans are bit-identical:
+
+    - sparse frames: one WindowExec of conditional sums over the range
+      frame (one Exchange + one Sort);
+    - dense frames: the cum+probe strategy specialized to integer
+      indicator sums (conditional counts are invertible, so no extrema
+      machinery is needed) — O(rows), independent of frame width.
+    """
+    names = list(flags)
+    est = estimate_frame_rows(df, entity_col, ts_col, window_s)
+    if est <= AUTO_FRAME_ROWS_THRESHOLD:
+        w = (
+            Window.partitionBy(entity_col)
+            .orderBy(_ms(ts_col))
+            .rangeBetween(-window_s * 1000, 0)
+        )
+        return df.select(
+            F.col(id_col),
+            F.col(entity_col),
+            F.count(F.lit(1)).over(w).alias("cnt"),
+            *[F.sum(F.when(flags[n], 1).otherwise(0)).over(w).alias(n) for n in names],
+        )
+    ms = _ms(ts_col)
+    base = df.select(
+        F.col(entity_col).alias("_ent"),
+        F.col(id_col).alias("_id"),
+        ms.alias("_ms"),
+        F.lit(1).alias("_one"),
+        *[flags[n].cast("int").alias(f"_f_{n}") for n in names],
+    )
+    real = base.withColumn("_probe", F.lit(0))
+    probe = base.select(
+        "_ent",
+        "_id",
+        (F.col("_ms") - F.lit(window_s * 1000)).alias("_ms"),
+        F.lit(0).alias("_one"),
+        *[F.lit(0).alias(f"_f_{n}") for n in names],
+    ).withColumn("_probe", F.lit(1))
+    u = real.unionByName(probe).repartition("_ent")
+    wcum = Window.partitionBy("_ent").orderBy("_ms")
+    incl = wcum.rangeBetween(Window.unboundedPreceding, 0)
+    excl = wcum.rangeBetween(Window.unboundedPreceding, -1)
+    metrics = ["_one"] + [f"_f_{n}" for n in names]
+    cum = u.withColumns(
+        {
+            **{f"_ci{c}": F.sum(c).over(incl) for c in metrics},
+            **{
+                f"_ce{c}": F.coalesce(F.sum(c).over(excl), F.lit(0))
+                for c in metrics
+            },
+        }
+    )
+    is_real = F.col("_probe") == 0
+    agg = cum.groupBy("_ent", "_id").agg(
+        *[F.max(F.when(is_real, F.col(f"_ci{c}"))).alias(f"_at{c}") for c in metrics],
+        *[F.max(F.when(~is_real, F.col(f"_ce{c}"))).alias(f"_b{c}") for c in metrics],
+    )
+    out_cols = {"cnt": F.col("_at_one") - F.col("_b_one")}
+    for n in names:
+        out_cols[n] = F.col(f"_at_f_{n}") - F.col(f"_b_f_{n}")
+    return agg.select(
+        F.col("_id").alias(id_col),
+        F.col("_ent").alias(entity_col),
+        *[c.alias(n) for n, c in out_cols.items()],
     )
 
 

@@ -74,48 +74,23 @@ def conditional_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     switching to the O(rows) cum+probe flag-count strategy on dense
     frames (adaptive, bit-identical).
     """
-    from ..operators.windows import (
-        AUTO_FRAME_ROWS_THRESHOLD,
-        estimate_frame_rows,
-        trailing_flag_counts_scalable,
-    )
+    from ..operators.windows import trailing_flag_counts
 
     df = load_table(spark, sf_dir, "events")
     hour = F.hour("ts")
-    night = (hour < 6) | (hour > 22)
-    weekend = F.weekday("ts") >= 5
-    business = hour.between(9, 17)
-    if estimate_frame_rows(df, "user_id", "ts", 86400) > AUTO_FRAME_ROWS_THRESHOLD:
-        flags = {"night": night, "weekend": weekend, "business": business}
-        out = trailing_flag_counts_scalable(df, flags, 86400)
-        n, nite, wkd = F.col("cnt"), F.col("night"), F.col("weekend")
-        return out.select(
-            "event_id",
-            "user_id",
-            n.alias("txn_count_24h"),
-            nite.alias("night_txn_count_24h"),
-            wkd.alias("weekend_txn_count_24h"),
-            F.col("business").alias("business_hours_txn_count_24h"),
-            (nite.cast("double") / n.cast("double")).alias("night_txn_ratio_24h"),
-            (wkd.cast("double") / n.cast("double")).alias("weekend_txn_ratio_24h"),
-        )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.unix_millis(F.col("ts")))
-        .rangeBetween(-86400000, 0)
-    )
-    n = F.count(F.lit(1)).over(w)
-    nite = F.sum(F.when(night, 1).otherwise(0)).over(w)
-    wkd = F.sum(F.when(weekend, 1).otherwise(0)).over(w)
-    return df.select(
+    flags = {
+        "night": (hour < 6) | (hour > 22),
+        "weekend": F.weekday("ts") >= 5,
+        "business": hour.between(9, 17),
+    }
+    n, nite, wkd = F.col("cnt"), F.col("night"), F.col("weekend")
+    return trailing_flag_counts(df, flags, 86400).select(
         "event_id",
         "user_id",
         n.alias("txn_count_24h"),
         nite.alias("night_txn_count_24h"),
         wkd.alias("weekend_txn_count_24h"),
-        F.sum(F.when(business, 1).otherwise(0)).over(w).alias(
-            "business_hours_txn_count_24h"
-        ),
+        F.col("business").alias("business_hours_txn_count_24h"),
         (nite.cast("double") / n.cast("double")).alias("night_txn_ratio_24h"),
         (wkd.cast("double") / n.cast("double")).alias("weekend_txn_ratio_24h"),
     )
@@ -139,42 +114,25 @@ FROM events e
 def unique_counts_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct event_type count over trailing 1h/24h windows (A6/U1).
 
-    Engine plan: size(collect_set() OVER range-frame) — one window pass
-    (memory ∝ distinct values per frame). At 100 TB switch
-    TrailingWindowSpec.distinct_exact=False → HLL sketch
-    (approx_count_distinct, 2% tolerance). The oracle's correlated
-    subqueries are the semantic spec only, not the engine plan.
-    Reference: flink_job/aml_stream_processor.py:166-171 (set() over state).
-    On dense frames the adaptive strategy swaps in the previous-occurrence
-    interval markers (exact, O(rows), no per-frame set).
+    Engine plan: trailing_features_auto projected to the two distinct
+    columns (Catalyst prunes the other metrics). Sparse frames run
+    size(collect_set() OVER range-frame) — one window pass (memory ∝
+    distinct values per frame); dense frames run the scalable kernel's
+    previous-occurrence interval markers (exact, O(rows), no per-frame
+    set). At 100 TB switch TrailingWindowSpec.distinct_exact=False → HLL
+    sketch (approx_count_distinct, 2% tolerance). The oracle's
+    correlated subqueries are the semantic spec only, not the engine
+    plan. Reference: flink_job/aml_stream_processor.py:166-171 (set()
+    over state).
     """
-    from ..operators.windows import (
-        AUTO_FRAME_ROWS_THRESHOLD,
-        TrailingWindowSpec,
-        estimate_frame_rows,
-        trailing_features_scalable,
-    )
+    from ..operators.windows import TrailingWindowSpec, trailing_features_auto
 
     df = load_table(spark, sf_dir, "events")
-    if estimate_frame_rows(df, "user_id", "ts", 86400) > AUTO_FRAME_ROWS_THRESHOLD:
-        spec = TrailingWindowSpec(
-            windows={"1h": 3600, "24h": 86400}, distinct_cols=("event_type",)
-        )
-        return trailing_features_scalable(df, spec).select(
-            "event_id", "user_id", "unique_event_type_1h", "unique_event_type_24h"
-        )
-    base = Window.partitionBy("user_id").orderBy(F.unix_millis(F.col("ts")))
-    w1 = base.rangeBetween(-3600000, 0)
-    w24 = base.rangeBetween(-86400000, 0)
-    return df.select(
-        "event_id",
-        "user_id",
-        F.size(F.collect_set("event_type").over(w1)).cast("long").alias(
-            "unique_event_type_1h"
-        ),
-        F.size(F.collect_set("event_type").over(w24)).cast("long").alias(
-            "unique_event_type_24h"
-        ),
+    spec = TrailingWindowSpec(
+        windows={"1h": 3600, "24h": 86400}, distinct_cols=("event_type",)
+    )
+    return trailing_features_auto(df, spec).select(
+        "event_id", "user_id", "unique_event_type_1h", "unique_event_type_24h"
     )
 
 

@@ -14,8 +14,8 @@ from ..operators.windows import (
     TrailingWindowSpec,
     trailing_features,
     trailing_features_auto,
+    trailing_features_scalable,
     trailing_features_sql_oracle,
-    trailing_sums_scalable,
     trailing_sums_scalable_oracle,
 )
 from ..sources import load_table
@@ -65,6 +65,14 @@ def _multi_cols() -> list[str]:
     return cols
 
 
+# the invertible metrics of SPEC_MULTI, in the sums query's column order
+_SUMS_COLS = ["user_id", "event_id"] + [
+    f"{m}_{w}"
+    for w in SPEC_MULTI.windows
+    for m in ("txn_count", "txn_amount_sum", "avg_txn_amount", "velocity_score")
+]
+
+
 @register(
     "trailing_sums_cumsum_strategy",
     oracle=trailing_sums_scalable_oracle(SPEC_MULTI),
@@ -74,7 +82,12 @@ def trailing_sums_cumsum_strategy(spark: SparkSession, sf_dir: str) -> DataFrame
     aggregates: cumulative sums + shadow probes, O(rows) independent of
     frame width (vs WindowExec's O(rows × frame)). Same semantics, same
     oracle family as trailing_multiwindow_features — two physical plans,
-    one logical operator. Hot entities (r10 s5) additionally
+    one logical operator.
+
+    Engine plan: the one cum+probe kernel, trailing_features_scalable,
+    projected to count/sum/avg/velocity; Catalyst prunes the extrema,
+    sum-of-squares and their stitch columns (1 Exchange + 1 Sort + 1
+    Window unbucketized). Hot entities (r10 s5) additionally
     time-bucketize so one key can't serialize a task — see
     trailing_features_scalable(hot_buckets=...)."""
     from ..operators.windows import hot_entity_cuts
@@ -84,7 +97,9 @@ def trailing_sums_cumsum_strategy(spark: SparkSession, sf_dir: str) -> DataFrame
         df, SPEC_MULTI.entity_col, SPEC_MULTI.ts_col,
         max(SPEC_MULTI.windows.values()),
     )
-    return trailing_sums_scalable(df, SPEC_MULTI, hot_buckets=hb)
+    return trailing_features_scalable(df, SPEC_MULTI, hot_buckets=hb).select(
+        *_SUMS_COLS
+    )
 
 
 @register(

@@ -12,7 +12,7 @@ import uuid
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..catalog import register
 from ..streaming.per_event import _run_tmpdir
@@ -401,38 +401,14 @@ def _category_counts_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus one conditional count per closed-domain category — a single
     WindowExec on sparse frames, the O(rows) cum+probe flag-count
     strategy on dense ones (adaptive, bit-identical)."""
-    from ..operators.windows import (
-        AUTO_FRAME_ROWS_THRESHOLD,
-        estimate_frame_rows,
-        trailing_flag_counts_scalable,
-    )
+    from ..operators.windows import trailing_flag_counts
 
     ev = load_table(spark, sf_dir, "events")
-    if estimate_frame_rows(ev, "user_id", "ts", 86400) > AUTO_FRAME_ROWS_THRESHOLD:
-        flags = {
-            f"_c{i}": F.col("event_type") == c
-            for i, c in enumerate(EVENT_TYPE_DOMAIN)
-        }
-        return trailing_flag_counts_scalable(ev, flags, 86400).select(
-            "event_id",
-            "user_id",
-            F.col("cnt").alias("txn_count_24h"),
-            *[f"_c{i}" for i in range(len(EVENT_TYPE_DOMAIN))],
-        )
-    sel = ev.select(
-        "event_id", "user_id", F.unix_millis(F.col("ts")).alias("_ms"), "event_type"
-    )
-    w = Window.partitionBy("user_id").orderBy("_ms").rangeBetween(-86400000, 0)
-    return sel.select(
-        "event_id",
-        "user_id",
-        F.count(F.lit(1)).over(w).alias("txn_count_24h"),
-        *[
-            F.sum(F.when(F.col("event_type") == c, 1).otherwise(0))
-            .over(w)
-            .alias(f"_c{i}")
-            for i, c in enumerate(EVENT_TYPE_DOMAIN)
-        ],
+    flags = {
+        f"_c{i}": F.col("event_type") == c for i, c in enumerate(EVENT_TYPE_DOMAIN)
+    }
+    return trailing_flag_counts(ev, flags, 86400).select(
+        "event_id", "user_id", F.col("cnt").alias("txn_count_24h"), *flags
     )
 
 

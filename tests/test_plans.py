@@ -130,12 +130,53 @@ def test_windowed_hhi_single_window_pass(spark, qs):
     assert _nodes(plan, "Window") == 1
 
 
+def _window_sections(plan: str) -> list[str]:
+    """The formatted plan's detail section of every Window node."""
+    import re
+
+    return re.findall(r"\(\d+\) Window\b.*?(?=\n\(\d+\) |\Z)", plan, re.S)
+
+
 def test_cumsum_strategy_single_shuffle_no_join(spark, qs):
     plan = _plan(qs["trailing_sums_cumsum_strategy"](spark, SF))
     # shadow-probe reattachment is a pivot aggregation that reuses the
     # window's entity partitioning — one Exchange total, never W joins
     assert "Join" not in plan
     assert _nodes(plan, "Exchange") == 1
+    # the sums query is a projection of the full kernel: Catalyst prunes
+    # the chunked extrema windows, leaving one cumulative Window + Sort
+    assert _nodes(plan, "Window") == 1
+    assert _nodes(plan, "Sort") == 1
+    windows = _window_sections(plan)
+    assert len(windows) == 1
+    assert not any(f in w for w in windows for f in ("max(", "min(")), windows
+
+
+def test_cumsum_strategy_bucketized_plan_shape(spark):
+    """Bucketized, the same projection keeps 1 Window + 1 Sort; the
+    (entity, bucket) repartition adds the second Exchange."""
+    from aml_feature_store_spark.operators.windows import (
+        hot_entity_cuts,
+        trailing_features_scalable,
+    )
+    from aml_feature_store_spark.queries.window_features import (
+        SPEC_MULTI,
+        _SUMS_COLS,
+    )
+    from aml_feature_store_spark.sources import load_table
+
+    df = load_table(spark, SF, "events")
+    hb = hot_entity_cuts(df, "user_id", "ts", 86400, min_rows=1)
+    assert hb is not None
+    plan = _plan(
+        trailing_features_scalable(df, SPEC_MULTI, hot_buckets=hb).select(
+            *_SUMS_COLS
+        )
+    )
+    assert "Join" not in plan
+    assert _nodes(plan, "Window") == 1
+    assert _nodes(plan, "Sort") == 1
+    assert _nodes(plan, "Exchange") == 2
 
 
 def test_no_single_partition_windows_in_drift_and_zscore(spark, qs):

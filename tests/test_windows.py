@@ -228,23 +228,16 @@ def test_auto_strategy_picks_by_density(spark):
     assert a == b
 
 
-def test_flag_counts_scalable_bit_identical(spark):
-    """Cum+probe conditional counts == range-frame conditional sums."""
+def test_flag_counts_scalable_bit_identical(spark, monkeypatch):
+    """trailing_flag_counts == range-frame conditional sums on both
+    routes: cum+probe (threshold 0) and the WindowExec plan (10⁹)."""
     from pyspark.sql import Window
 
-    from aml_feature_store_spark.operators.windows import (
-        trailing_flag_counts_scalable,
-    )
+    from aml_feature_store_spark.operators import windows
     from aml_feature_store_spark.sources import load_table
 
     df = load_table(spark, "/root/testdata/sf0.001", "events")
     night = (F.hour("ts") < 6) | (F.hour("ts") > 22)
-    got = {
-        r["event_id"]: r
-        for r in trailing_flag_counts_scalable(
-            df, {"night": night}, 86400
-        ).collect()
-    }
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_millis(F.col("ts")))
@@ -258,9 +251,39 @@ def test_flag_counts_scalable_bit_identical(spark):
             F.sum(F.when(night, 1).otherwise(0)).over(w).alias("night"),
         ).collect()
     }
-    assert set(got) == set(want) and len(got) == 1000
-    for eid, rw in want.items():
-        assert (got[eid]["cnt"], got[eid]["night"]) == (rw["cnt"], rw["night"])
+    assert len(want) == 1000
+    for threshold, cum_probe in ((0, True), (10**9, False)):
+        monkeypatch.setattr(windows, "AUTO_FRAME_ROWS_THRESHOLD", threshold)
+        out = windows.trailing_flag_counts(df, {"night": night}, 86400)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("_probe" in plan) == cum_probe, threshold
+        assert out.columns == ["event_id", "user_id", "cnt", "night"]
+        got = {r["event_id"]: r for r in out.collect()}
+        assert set(got) == set(want)
+        for eid, rw in want.items():
+            assert (got[eid]["cnt"], got[eid]["night"]) == (rw["cnt"], rw["night"])
+
+
+def test_routed_queries_equal_on_both_routes(spark, monkeypatch):
+    """The queries whose density router lives in windows.py return the
+    same rows on the WindowExec route (threshold 10⁹) and on the O(rows)
+    route (threshold 0): the router reads AUTO_FRAME_ROWS_THRESHOLD at
+    call time, so patching it switches every one of them."""
+    from aml_feature_store_spark.catalog import queries
+    from aml_feature_store_spark.operators import windows
+
+    qs = queries()
+    for name in ("conditional_window_counts", "unique_counts_windows",
+                 "windowed_hhi_24h"):
+        outs = {}
+        for threshold in (10**9, 0):
+            monkeypatch.setattr(windows, "AUTO_FRAME_ROWS_THRESHOLD", threshold)
+            df = qs[name](spark, "/root/testdata/sf0.001")
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            outs[threshold] = (plan, sorted(map(tuple, df.collect())))
+        (p_sparse, r_sparse), (p_dense, r_dense) = outs[10**9], outs[0]
+        assert p_sparse != p_dense, name
+        assert len(r_sparse) == 1000 and r_sparse == r_dense, name
 
 
 def test_bucketized_bit_identical(spark):
@@ -377,12 +400,13 @@ def test_bucketized_ties_and_markers(spark):
 
 
 def test_sums_cumsum_bucketized_bit_identical(spark):
-    """The cum+probe sums strategy with hot-entity bucketization must
-    equal its unbucketized self (and thus the frame-based operator)."""
+    """The sums query's code path — trailing_features_scalable projected
+    to count/sum/avg/velocity — with hot-entity bucketization must equal
+    its unbucketized self (and thus the frame-based operator)."""
     from aml_feature_store_spark.operators.windows import (
         TrailingWindowSpec,
         hot_entity_cuts,
-        trailing_sums_scalable,
+        trailing_features_scalable,
     )
     from aml_feature_store_spark.sources import load_table
 
@@ -397,14 +421,132 @@ def test_sums_cumsum_bucketized_bit_identical(spark):
                   "velocity_score")
     ]
     a = {r["event_id"]: r for r in
-         trailing_sums_scalable(df, spec).select(*cols).collect()}
+         trailing_features_scalable(df, spec).select(*cols).collect()}
     b = {r["event_id"]: r for r in
-         trailing_sums_scalable(df, spec, hot_buckets=hb)
+         trailing_features_scalable(df, spec, hot_buckets=hb)
          .select(*cols).collect()}
     assert set(a) == set(b) and len(a) == 1000
     for eid, ra in a.items():
         for c in cols:
             assert ra[c] == b[eid][c], (eid, c, ra[c], b[eid][c])
+
+
+# entity / distinct values the stitch must survive: SQL quote, escape
+# and backtick characters, and the parser's ${var} substitution syntax
+_ODD = "it's \\ `x`"
+_ODD_VAR = "${x}"
+
+
+def _three_way(df, spec, hb, cols, n):
+    """trailing_features == unbucketized == bucketized, bit for bit."""
+    from aml_feature_store_spark.operators.windows import (
+        trailing_features,
+        trailing_features_scalable,
+    )
+
+    outs = [
+        trailing_features(df, spec),
+        trailing_features_scalable(df, spec),
+        trailing_features_scalable(df, spec, hot_buckets=hb),
+    ]
+    ref, *others = [
+        {r["event_id"]: r for r in o.select(*cols).collect()} for o in outs
+    ]
+    assert len(ref) == n
+    for other in others:
+        assert set(other) == set(ref)
+        for eid, ra in ref.items():
+            for c in cols:
+                assert ra[c] == other[eid][c], (eid, c, ra[c], other[eid][c])
+
+
+def test_bucketized_degenerate_keys_bit_identical(spark):
+    """The bucketized plan on degenerate keys: a NULL user_id among the
+    hot entities (it must ride bucket 0), string entities holding quote,
+    backslash, backtick and ${x} characters, and the same strings as
+    values of a distinct column."""
+    from aml_feature_store_spark.operators.windows import (
+        TrailingWindowSpec,
+        hot_entity_cuts,
+    )
+    from aml_feature_store_spark.sources import load_table
+
+    tdf = load_table(spark, "/root/testdata/sf0.001", "events")
+    odd_type = (
+        F.when(F.col("event_type") == "view", F.lit(_ODD))
+        .when(F.col("event_type") == "click", F.lit(_ODD_VAR))
+        .otherwise(F.col("event_type"))
+    )
+    odd = tdf.withColumn("event_type", odd_type).withColumn(
+        "user_id", F.when(F.col("user_id") % 5 != 0, F.col("user_id"))
+    )
+    spec = TrailingWindowSpec(
+        windows={"1h": 3600, "24h": 86400}, distinct_cols=("event_type",)
+    )
+    hb = hot_entity_cuts(odd, "user_id", "ts", 86400, min_rows=1, buckets=4,
+                         cap=1000)
+    assert None in hb.ents and len(hb.ents) > 2
+    assert odd.filter(F.col("event_type") == _ODD).count() > 0
+    cols = ["event_id", "txn_count_1h", "txn_amount_sum_24h",
+            "max_txn_amount_1h", "min_txn_amount_24h", "std_txn_amount_24h",
+            "unique_event_type_1h", "unique_event_type_24h"]
+    _three_way(odd, spec, hb, cols, 1000)
+
+    mspec = TrailingWindowSpec(
+        entity_col="event_type",
+        windows={"1h": 3600, "24h": 86400},
+        distinct_cols=("user_id",),
+    )
+    mhb = hot_entity_cuts(odd, "event_type", "ts", 86400, min_rows=1,
+                          buckets=8, cap=100)
+    assert {_ODD, _ODD_VAR} <= set(mhb.ents)
+    mcols = ["event_id", "txn_count_1h", "unique_user_id_1h",
+             "txn_count_24h", "unique_user_id_24h", "max_txn_amount_24h",
+             "std_txn_amount_24h", "min_txn_amount_1h"]
+    _three_way(odd, mspec, mhb, mcols, 1000)
+
+
+def test_bucketized_build_py4j_flat_in_buckets(spark):
+    """The bucketized plan build sends the stitch as SQL text, so its
+    py4j traffic does not grow with the bucket count (one ``F.lit`` per
+    array element did: 8 hot entities cost ~25k commands at 4 buckets
+    and ~84k at 64). Proxy-release commands are left out of the count:
+    they follow Python's garbage collector, not the build."""
+    import gc
+
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    from aml_feature_store_spark.operators.windows import (
+        TrailingWindowSpec,
+        hot_entity_cuts,
+        trailing_features_scalable,
+    )
+    from aml_feature_store_spark.sources import load_table
+
+    spec = TrailingWindowSpec(windows={"5m": 300, "1h": 3600, "24h": 86400})
+    df = load_table(spark, "/root/testdata/sf0.001", "events")
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = [0]
+
+    def counting(command, *args, **kwargs):
+        sent[0] += not command.startswith(MEMORY_COMMAND_NAME)
+        return send(command, *args, **kwargs)
+
+    counts = {}
+    for nb in (4, 64):
+        hb = hot_entity_cuts(df, "user_id", "ts", 86400, min_rows=1,
+                             buckets=nb, cap=8)
+        assert len(hb.ents) == 8
+        gc.collect()
+        sent[0] = 0
+        client.send_command = counting
+        try:
+            trailing_features_scalable(df, spec, hot_buckets=hb)
+        finally:
+            del client.send_command
+        counts[nb] = sent[0]
+    assert counts[64] <= 1.1 * counts[4], counts
 
 
 def test_auto_routes_hot_entities_to_buckets(spark):

@@ -29,6 +29,7 @@ import ast
 import glob
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -119,7 +120,7 @@ def _latest_round_commit(root: str) -> str | None:
         return None
     for line in out.splitlines():  # newest first
         sha, _, subj = line.partition(" ")
-        if subj.startswith("round ") and ":" in subj:
+        if re.match(r"round \d+:", subj):
             return sha
     return None
 
