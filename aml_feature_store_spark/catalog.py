@@ -72,7 +72,7 @@ CERTIFIED: dict[str, int] = {
     "ks_drift_value": 9,
     "large_volume_customer_q18": 9,
     "local_supplier_volume_q5": 9,
-    "model_calibration_bins": 9,
+    # "model_calibration_bins" invalidated r13: risk_score sums its rule bumps as DECIMAL (one sf0.01 mean_score changes) — re-certify
     "multimodal_resize_features": 9,
     "multimodal_video_features": 9,
     "order_priority_check_q4": 9,
@@ -83,7 +83,7 @@ CERTIFIED: dict[str, int] = {
     "quantiles_approx_by_event_type": 9,
     "revenue_cube_by_type_dow": 9,
     "rfm_segments": 9,
-    "risk_scores": 9,
+    # "risk_scores" invalidated r13: risk_score sums its rule bumps as DECIMAL (rows where two bumps fire change) — re-certify
     "robust_zscore_outliers": 9,
     "seeded_sample": 9,
     "sequence_packing": 9,

@@ -31,6 +31,8 @@ RULES: list[tuple[str, float, float]] = [
     ("night_txn_count_24h", 3.0, 0.10),
 ]
 
+BUMP_DEC = "decimal(2,1)"  # the type DuckDB gives the literals 0.3, 0.2, 0.1
+
 LOW_MAX, MEDIUM_MAX = 0.3, 0.6  # api/main.py:100-104
 
 
@@ -43,10 +45,13 @@ def risk_score(df: DataFrame, entity_col: str = "user_id") -> DataFrame:
     base = F.lit(0.0)
     for col, thr, w in RISK_WEIGHTS:
         base = base + _norm(col, thr) * F.lit(w)
-    bumps = F.lit(0.0)
+    # the oracle's CASE bumps are DECIMAL literals, so they sum exactly
+    # (0.2 + 0.1 is 0.3, not 0.30000000000000004); cast to double once
+    zero = F.lit(0).cast(BUMP_DEC)
+    bumps = zero
     for col, thr, bump in RULES:
-        bumps = bumps + F.when(F.col(col) > thr, F.lit(bump)).otherwise(F.lit(0.0))
-    score = F.least(F.greatest(base + bumps, F.lit(0.0)), F.lit(1.0))
+        bumps = bumps + F.when(F.col(col) > thr, F.lit(bump).cast(BUMP_DEC)).otherwise(zero)
+    score = F.least(F.greatest(base + bumps.cast("double"), F.lit(0.0)), F.lit(1.0))
     level = (
         F.when(score <= F.lit(LOW_MAX), F.lit("LOW"))
         .when(score <= F.lit(MEDIUM_MAX), F.lit("MEDIUM"))

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .graph import MAX_ROUNDS, connected_components
+
 # MinHash parameters (shared with the oracle SQL — keep literal)
 MINHASH_K = 16
 LSH_BANDS = 8  # 2 rows per band
@@ -386,7 +388,6 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5,
 
 def minhash_dedup_labels(docs: DataFrame, threshold: float = 0.5,
                          id_col: str = "doc_id",
-                         max_rounds: int = 12,
                          has_exact_dups: bool | None = None) -> DataFrame:
     """Corpus dedup labels (component = min reachable id, is_canonical)
     over the COLLAPSED exact-dup graph (r8): star-contraction components
@@ -408,13 +409,13 @@ def minhash_dedup_labels(docs: DataFrame, threshold: float = 0.5,
     if has_exact_dups is None:
         has_exact_dups = _has_exact_dups(docs, id_col)
     if not has_exact_dups:
-        return near_dup_components_star(
-            docs, _rep_lsh_pairs(docs, threshold, id_col), id_col, max_rounds
+        return near_dup_components(
+            docs, _rep_lsh_pairs(docs, threshold, id_col), id_col
         )
     members, reps = _exact_collapse(docs, id_col)
     members = members.cache()
     rep_pairs = _rep_lsh_pairs(reps, threshold, id_col)
-    rep_labels = near_dup_components_star(reps, rep_pairs, id_col, max_rounds)
+    rep_labels = near_dup_components(reps, rep_pairs, id_col)
     shingled = _shingled_reps(reps, id_col).withColumn("_sh", F.lit(True))
     lab = (
         members.join(shingled, "_rep", "left")
@@ -713,83 +714,34 @@ def near_dup_components(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iterations: int = 20,
+    max_rounds: int = MAX_ROUNDS,
 ) -> DataFrame:
     """Connected components over the near-dup pair graph — the step that
     turns pair detection into corpus dedup: every document gets a
     ``component`` label (the minimum doc id reachable through near-dup
-    edges; singletons label themselves) and ``is_canonical`` marks the
-    one kept representative per cluster.
+    ``(d1, d2)`` edges; singletons label themselves) and ``is_canonical``
+    marks the one kept representative per cluster.
 
-    Iterative min-label propagation: each round every node takes the min
-    of its own label and its neighbors' labels; converged when no label
-    changes. Rounds are bounded by the cluster diameter — near-dup
-    clusters are shallow (near-cliques from transitive similarity), so
-    this converges in a handful of rounds; each round is two shuffles
-    (neighbor min + label join) with lineage cut by localCheckpoint. For
-    adversarially long path graphs at 100 TB, swap the inner step for the
-    large-star/small-star contraction (same fixpoint, O(log n) rounds).
+    The components come from :func:`graph.connected_components` (star
+    contraction); this step only left-joins ``docs`` to its labels.
     """
-    edges = (
-        pairs.select(F.col("d1").alias("a"), F.col("d2").alias("b"))
-        .unionByName(pairs.select(F.col("d2").alias("a"), F.col("d1").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = docs.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("label")
-    ).localCheckpoint()
-    converged = False
-    for _ in range(max_iterations):
-        nbr = (
-            edges.join(
-                labels.select(
-                    F.col("node").alias("b"), F.col("label").alias("blabel")
-                ),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("blabel").alias("nlabel"))
+    comps = connected_components(pairs, "d1", "d2", max_rounds)
+    component = F.least(F.col("node"), F.coalesce(F.col("comp"), F.col("node")))
+    return (
+        docs.select(F.col(id_col).alias("node"))
+        .join(comps, "node", "left")
+        .select(
+            F.col("node").alias(id_col),
+            component.alias("component"),
+            (F.col("node") == component).alias("is_canonical"),
         )
-        new = (
-            labels.join(nbr, labels["node"] == nbr["a"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # silently returning partial labels would mislabel components;
-        # a cluster diameter beyond max_iterations needs more rounds (or
-        # the large-star/small-star contraction noted above)
-        raise RuntimeError(
-            f"near_dup_components did not converge in {max_iterations} "
-            "rounds; raise max_iterations (cluster diameter exceeds it)"
-        )
-    return labels.select(
-        F.col("node").alias(id_col),
-        F.col("label").alias("component"),
-        (F.col("node") == F.col("label")).alias("is_canonical"),
     )
 
 
 def near_dup_components_sql(threshold: float = 0.5, table: str = "documents") -> str:
     """Recursive-CTE oracle: transitive closure over the pair graph, then
     component = min reachable id (DuckDB evaluates the closure exactly at
-    oracle scale; the engine plan is the iterative propagation above)."""
+    oracle scale; the engine plan is the star contraction above)."""
     pairs = minhash_lsh_pairs_sql(threshold, table)
     return f"""
 WITH RECURSIVE p AS (SELECT d1, d2 FROM ({pairs}) _mh),
@@ -896,127 +848,6 @@ SELECT d.{id_col},
          ELSE 0.0 END AS dup_fraction
 FROM {table} d LEFT JOIN per_doc p ON p.{id_col} = d.{id_col}
 """
-
-
-def near_dup_components_star(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_rounds: int = 12,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the fixed-log-round scale path for the near-dup
-    component step.
-
-    Unlike min-label propagation (rounds ∝ cluster diameter), star
-    contraction halves component "height" every round, converging in
-    O(log n) rounds on ANY graph shape — 12 rounds covers components of
-    ~2^12 diameter, where label propagation would need thousands of
-    rounds. Each half-round is one groupBy (per-node min) plus one
-    equi-join (attach the min back to each edge) — no collect_list, no
-    driver-side graph. Convergence is detected with a single-row
-    (count, xxhash64-sum) probe per round, not a full-frame comparison.
-
-    Both directions emit the same fixpoint: a star per component centered
-    at its minimum id, so the final label read-off is one per-node min.
-    Same output contract as near_dup_components (component = min reachable
-    id, is_canonical on the minimum).
-    """
-    edges = (
-        pairs.select(F.col("d1").alias("a"), F.col("d2").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _probe(e: DataFrame):
-        # bit_xor: order-independent and overflow-free under ANSI mode
-        # (a SUM of xxhash64 values overflows long)
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
-    sig = _probe(edges)
-    converged = edges.isEmpty()
-    for _ in range(max_rounds):
-        if converged:
-            break
-        # large-star: every strictly-larger neighbor of u links to
-        # m = min(N(u) ∪ {u}); symmetric processing covers both endpoints
-        sym = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("_mv"))
-            .select("u", F.least("_mv", F.col("u")).alias("m"))
-        )
-        large = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .select(
-                F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-            )
-            .distinct()
-        )
-        # small-star: orient edges large→small; every smaller neighbor
-        # (and u itself) links to the minimum
-        mins2 = (
-            large.groupBy("u")
-            .agg(F.min("v").alias("m"))
-        )
-        joined = large.join(mins2, "u")
-        small = (
-            joined.select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .unionByName(
-                joined.select(F.col("u").alias("a"), F.col("m").alias("b"))
-            )
-            .filter(F.col("a") != F.col("b"))
-            .select(
-                F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        new_sig = _probe(small)
-        converged = new_sig == sig or small.isEmpty()
-        sig = new_sig
-        edges = small
-    if not converged:
-        raise RuntimeError(
-            f"near_dup_components_star did not converge in {max_rounds} "
-            "rounds (components of diameter > 2^rounds); raise max_rounds"
-        )
-    comp = (
-        edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        .groupBy("u")
-        .agg(F.min("v").alias("_mv"))
-        .select(F.col("u").alias("node"), F.least("_mv", F.col("u")).alias("_m"))
-    )
-    return (
-        docs.select(F.col(id_col).alias("node"))
-        .join(comp, "node", "left")
-        .select(
-            F.col("node").alias(id_col),
-            F.least(
-                F.col("node"), F.coalesce(F.col("_m"), F.col("node"))
-            ).alias("component"),
-            (
-                F.col("node")
-                == F.least(F.col("node"), F.coalesce(F.col("_m"), F.col("node")))
-            ).alias("is_canonical"),
-        )
-    )
 
 
 def ngrams(docs: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:

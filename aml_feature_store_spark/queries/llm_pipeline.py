@@ -44,11 +44,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("dedup_components_lsh", oracle=dedup.near_dup_components_sql(0.5))
 def dedup_components_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters: connected components over the verified
-    MinHash-LSH pair graph via large-star/small-star contraction
-    (Kiveris et al. SoCC'14 — fixed O(log n) rounds on any graph shape;
-    the min-label-propagation twin stays as near_dup_components,
-    pytest-pinned identical), one canonical doc per cluster (X2
-    completion — pair detection alone does not dedup a corpus).
+    MinHash-LSH pair graph via graph.connected_components, the engine's
+    one components kernel (large-star/small-star contraction, Kiveris et
+    al. SoCC'14 — rounds grow with log(component size) on any graph
+    shape), one canonical doc per cluster (X2 completion — pair
+    detection alone does not dedup a corpus).
     Oracle = recursive-CTE transitive closure. r8: runs on the collapsed
     exact-dup graph (dedup.minhash_dedup_labels) — a 25%-of-corpus
     exact-copy cluster costs O(cluster), not O(cluster²) expanded

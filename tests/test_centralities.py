@@ -76,6 +76,27 @@ def test_connected_components_labels(spark):
     assert labels == {5: 5, 6: 5, 7: 5, 1: 1, 2: 1, 9: 9}
 
 
+def test_path_graph_65_nodes(spark):
+    """A 65-node path through the per-component split: closed-form path
+    centralities (node i: betweenness 2·i·(n−1−i)/((n−1)(n−2)), closeness
+    (n−1)/Σdist)."""
+    n = 65
+    out = {
+        r["node"]: r
+        for r in global_centralities(
+            _pairs(spark, [(i, i + 1) for i in range(n - 1)])
+        ).collect()
+    }
+    assert sorted(out) == list(range(n))
+    for i in range(n):
+        j = n - 1 - i
+        dist = i * (i + 1) // 2 + j * (j + 1) // 2
+        assert out[i]["closeness_centrality"] == pytest.approx((n - 1) / dist, abs=1e-6)
+        assert out[i]["betweenness_centrality"] == pytest.approx(
+            2 * i * j / ((n - 1) * (n - 2)), abs=1e-6
+        )
+
+
 def test_multi_source_bfs_exact_distances(spark):
     """Path graph 1-2-3-4-5 plus isolated pair (8,9): exact BFS distances
     from two roots, unreachable nodes absent, max_depth cap honored."""

@@ -104,7 +104,7 @@ def test_exact_collapse_pairs_equal_uncollapsed(spark):
     }
     ref = {
         r["doc_id"]: (r["component"], r["is_canonical"])
-        for r in dedup.near_dup_components_star(
+        for r in dedup.near_dup_components(
             d, dedup._rep_lsh_pairs(d, threshold=0.5)
         ).collect()
     }
@@ -397,7 +397,7 @@ def test_multimodal_synthesized_bmp_roundtrip(spark):
 
 
 def test_near_dup_components_chain_triangle_singleton(spark):
-    """Min-label propagation handles chains (transitivity), triangles,
+    """Near-dup components handle chains (transitivity), triangles,
     and singletons; canonical = min id per component."""
     from aml_feature_store_spark.operators.dedup import near_dup_components
 
@@ -596,21 +596,22 @@ def test_multimodal_malformed_header_yields_null_row(spark):
 
 
 def test_near_dup_components_raises_when_unconverged(spark):
-    """Exhausting max_iterations without a fixpoint must raise, not
-    silently return partial component labels."""
+    """Exhausting max_rounds of star contraction without a fixpoint must
+    raise, not silently return partial component labels; the default
+    bound converges on the same graph."""
     import pytest as _pytest
 
     from aml_feature_store_spark.operators.dedup import near_dup_components
 
-    docs = spark.createDataFrame([(i,) for i in range(1, 7)], "doc_id long")
-    # path graph of diameter 5: needs ~5 rounds for label 1 to reach node 6
+    n = 301
+    docs = spark.createDataFrame([(i,) for i in range(1, n + 1)], "doc_id long")
+    # a 301-node path needs 9-10 star-contraction rounds
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 6)], "d1 long, d2 long"
+        [(i, i + 1) for i in range(1, n)], "d1 long, d2 long"
     )
     with _pytest.raises(RuntimeError, match="did not converge"):
-        near_dup_components(docs, pairs, max_iterations=2)
-    # and with enough rounds the same graph converges to one component
-    got = near_dup_components(docs, pairs, max_iterations=10)
+        near_dup_components(docs, pairs, max_rounds=4)
+    got = near_dup_components(docs, pairs)
     assert {r["component"] for r in got.collect()} == {1}
 
 
@@ -806,26 +807,9 @@ def test_repetition_stats_known_docs(spark):
     assert got[3]["n_words"] == 1 and got[3]["top_bigram_frac"] == 0.0
 
 
-def test_star_contraction_components_match_label_propagation(spark):
-    """Star contraction on a 40-node random graph + long path + isolated
-    nodes: labels match brute-force union-find exactly, and a
-    diameter-12 path converges within the fixed O(log n) round budget
-    (label propagation would need 12 rounds; star needs ~4)."""
-    import random
-
-    from aml_feature_store_spark.operators.dedup import (
-        near_dup_components,
-        near_dup_components_star,
-    )
-
-    rng = random.Random(42)
-    nodes = list(range(1, 41))
-    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(25)]
-    edges += [(100 + i, 101 + i) for i in range(12)]  # path of diameter 12
-    all_nodes = sorted({n for e in edges for n in e} | set(nodes) | {999})
-
-    # brute-force union-find reference
-    parent = {n: n for n in all_nodes}
+def _union_find_components(edges, nodes):
+    """Brute-force union-find reference: node -> min id of its component."""
+    parent = {n: n for n in nodes}
 
     def find(x):
         while parent[x] != x:
@@ -837,30 +821,61 @@ def test_star_contraction_components_match_label_propagation(spark):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in all_nodes}
+    return {n: find(n) for n in nodes}
+
+
+def test_star_contraction_components_match_union_find(spark):
+    """Star contraction on a 40-node random graph + long path + isolated
+    nodes: labels match brute-force union-find exactly."""
+    import random
+
+    from aml_feature_store_spark.operators.dedup import near_dup_components
+
+    rng = random.Random(42)
+    nodes = list(range(1, 41))
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(25)]
+    edges += [(100 + i, 101 + i) for i in range(12)]  # path of diameter 12
+    all_nodes = sorted({n for e in edges for n in e} | set(nodes) | {999})
+    want = _union_find_components(edges, all_nodes)
 
     docs = spark.createDataFrame([(n,) for n in all_nodes], "doc_id long")
     pairs = spark.createDataFrame(edges, "d1 long, d2 long")
     got = {
         r["doc_id"]: r["component"]
-        for r in near_dup_components_star(docs, pairs, max_rounds=6).collect()
+        for r in near_dup_components(docs, pairs).collect()
     }
     assert got == want
-    # and agrees with the label-propagation implementation
-    lp = {
-        r["doc_id"]: r["component"]
-        for r in near_dup_components(docs, pairs, max_iterations=20).collect()
-    }
-    assert got == lp
+
+
+def test_connected_components_match_union_find(spark):
+    """graph.connected_components on a 65-node path and a ~1,500-node
+    random graph equals union-find."""
+    import random
+
+    from aml_feature_store_spark.operators.graph import connected_components
+
+    rng = random.Random(7)
+    path = [(i, i + 1) for i in range(1, 65)]
+    rand = [(rng.randrange(1000, 3000), rng.randrange(1000, 3000))
+            for _ in range(1500)]
+    for edges in (path, rand):
+        nodes = sorted({n for e in edges for n in e})
+        got = {
+            r["node"]: r["comp"]
+            for r in connected_components(
+                spark.createDataFrame(edges, "u long, v long")
+            ).collect()
+        }
+        assert got == _union_find_components(edges, nodes)
 
 
 def test_star_contraction_empty_and_singletons(spark):
-    from aml_feature_store_spark.operators.dedup import near_dup_components_star
+    from aml_feature_store_spark.operators.dedup import near_dup_components
 
     docs = spark.createDataFrame([(1,), (2,), (3,)], "doc_id long")
     pairs = spark.createDataFrame([], "d1 long, d2 long")
     got = {r["doc_id"]: (r["component"], r["is_canonical"])
-           for r in near_dup_components_star(docs, pairs).collect()}
+           for r in near_dup_components(docs, pairs).collect()}
     assert got == {1: (1, True), 2: (2, True), 3: (3, True)}
 
 

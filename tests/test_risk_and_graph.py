@@ -1,8 +1,15 @@
-"""Unit tests: rule risk model (D1) and graph operators (J5/A27/A28)."""
+"""Unit tests: rule risk model (D1) and graph operators (J5/A27/A28), and
+the exact oracle check of every query that calls the risk model or the
+connected-components kernel."""
 
 from __future__ import annotations
 
+import os
+import sys
+from pathlib import Path
+
 import pytest
+from conftest import SF_CORRECT
 
 from aml_feature_store_spark.functions.risk import risk_score
 from aml_feature_store_spark.operators.graph import (
@@ -10,6 +17,10 @@ from aml_feature_store_spark.operators.graph import (
     node_degrees,
     shared_neighbor_pairs,
 )
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+
+import check  # noqa: E402
 
 FEATURE_SCHEMA = (
     "user_id long, txn_amount_sum_1h double, txn_count_1h long, "
@@ -45,6 +56,77 @@ def test_risk_bucketing_boundaries(spark):
     df = spark.createDataFrame(rows, FEATURE_SCHEMA)
     got = {r["user_id"]: r["risk_level"] for r in risk_score(df).collect()}
     assert got == {1: "LOW", 2: "MEDIUM", 3: "HIGH"}
+
+
+def test_risk_score_matches_duckdb_when_bumps_stack(spark):
+    """The oracle's CASE bumps are DECIMAL literals that sum exactly; the
+    engine must not add 0.2 + 0.1 as doubles (0.30000000000000004). Rows
+    where two or three bumps fire are compared bit for bit with DuckDB
+    running risk_score_sql over the same rows."""
+    import random
+
+    import duckdb
+
+    from aml_feature_store_spark.functions.risk import risk_score_sql
+
+    rng = random.Random(11)
+    rows = []
+    for i in range(200):
+        rows.append((
+            i,
+            rng.choice([rng.uniform(0, 9999), rng.uniform(10001, 20000)]),
+            rng.randrange(0, 12),
+            rng.uniform(1.51, 2.5),  # velocity bump fires
+            rng.randrange(0, 6),
+            rng.randrange(4, 9),  # night-count bump fires
+            rng.random(),
+        ))
+    df = spark.createDataFrame(rows, FEATURE_SCHEMA)
+    got = {r["user_id"]: r["risk_score"] for r in risk_score(df).collect()}
+    con = duckdb.connect()
+    con.register("feats", df.toPandas())
+    want = dict(
+        con.sql(
+            f"SELECT user_id, risk_score FROM ({risk_score_sql('SELECT * FROM feats')})"
+        ).fetchall()
+    )
+    assert got == want
+
+
+# every registered caller of risk_score, plus the one registered query
+# over the connected-components kernel
+ORACLE_EXACT_QUERIES = [
+    "risk_scores",
+    "model_calibration_bins",
+    "model_auc",
+    "model_eval_metrics",
+    "batch_score_requests",
+    "dedup_components_lsh",
+]
+
+
+@pytest.fixture(scope="module")
+def oracle_con():
+    import duckdb
+
+    con = duckdb.connect()
+    for t in check.TABLES:
+        p = os.path.join(SF_CORRECT, f"{t}.parquet")
+        if os.path.exists(p):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", ORACLE_EXACT_QUERIES)
+def test_query_matches_oracle_exactly(spark, oracle_con, name):
+    """The query on SF_CORRECT equals its catalog oracle on DuckDB with
+    no tolerance, through tools/check.py's own compare."""
+    import __spark_entry__ as ent
+
+    sdf = ent.queries()[name](spark, SF_CORRECT).toPandas()
+    odf = oracle_con.sql(ent.oracle_sql()[name]).df()
+    assert check.compare(sdf, odf, name) == []
 
 
 def _txn_df(spark):
