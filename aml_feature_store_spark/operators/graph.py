@@ -703,26 +703,14 @@ def pagerank(
     base = (1.0 - damping) / n
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     for it in range(n_iters):
-        # per-edge contributions are snapped to the 1e-12 lattice as
-        # SCALED INT64 and summed as longs (r7; replaces the r6
-        # DECIMAL(38,15) sum, which was bit-exact but several× slower on
-        # the hottest join ×8 iterations): floor(x*1e12 + 0.5) is the
-        # nearest lattice integer to x (|fp error of x*1e12| ≲ 1e-4 ≪ 0.5
-        # for x ≤ 1), computed from bit-identical doubles in both engines,
-        # so the per-edge integer — and therefore the order-independent
-        # long sum — cannot differ between Spark and the oracle. Per-dst
-        # sums are ≤ Σranks·1e12 ≈ 1e12, far inside int64.
+        # per-edge contributions summed as 1e12-lattice longs (_snap);
+        # per-dst sums are ≤ Σranks·1e12 ≈ 1e12, far inside int64
         contrib = (
             edges_w.join(ranks.withColumnRenamed("node", "src"), "src")
             .groupBy("dst")
             .agg(
                 (
-                    F.sum(
-                        F.floor(
-                            F.col("rank") / F.col("outdeg") * F.lit(1e12)
-                            + F.lit(0.5)
-                        )
-                    ).cast("double")
+                    F.sum(_snap(F.col("rank") / F.col("outdeg"))).cast("double")
                     / F.lit(1e12)
                 ).alias("c")
             )
@@ -747,6 +735,13 @@ def pagerank(
     )
 
 
+def _snap(c: Column) -> Column:
+    """The nearest 1e12-lattice integer of a score x ≤ 1: the fp error of
+    x·1e12 is ≲1e-4 ≪ 0.5, so Spark and the oracle compute the same long
+    from bit-identical doubles, and long sums are order-independent."""
+    return F.floor(c * F.lit(1e12) + F.lit(0.5))
+
+
 def _guarded_norm(side: str):
     """The L2 norm column with an explicit overflow trap: a DECIMAL(38,0)
     sum that overflows yields NULL (non-ANSI) — dividing by it would
@@ -764,6 +759,19 @@ def _guarded_norm(side: str):
             )
         )
     )
+
+
+def _l2(raw: Column) -> Column:
+    """HITS's exact L2 norm ``nrm`` of 1e12-lattice longs: (19,0)² products
+    summed at DECIMAL(38,0), exact while Σ raw² < 1e14 (raw in score
+    units). In round 1 raw is the in-degree, so one node of in-degree
+    ≥ ~1e7 overflows; :func:`_guarded_norm` raises on that, as DuckDB's
+    HUGEINT does. The 1e12 scale cancels in raw / nrm."""
+    return F.sqrt(
+        F.sum(raw.cast("decimal(19,0)") * raw.cast("decimal(19,0)")).cast(
+            "double"
+        )
+    ).alias("nrm")
 
 
 def hits(
@@ -787,107 +795,100 @@ def hits(
         raise ValueError("hits() needs at least one iteration")
     edges = edges.select("src", "dst").localCheckpoint(eager=True)
     hubs = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "h", F.lit(1.0)
+        "s", F.lit(1.0)
     ).localCheckpoint(eager=True)
-    # Exact-summation recipe (r7; replaces the r6 DECIMAL(19,12) per-edge
-    # sums with the scaled-int64 lattice — same bit-exactness, integer-sum
-    # cost on the hot per-edge aggregations): scores are 12-dp doubles in
-    # [0, 1], so floor(h*1e12 + 0.5) recovers each score's exact lattice
-    # integer (fp error of h*1e12 is ≲1e-4 ≪ 0.5) identically in both
-    # engines, and the per-node long sums are order-independent. Only the
-    # node-cardinality L2 norm still sums in DECIMAL — (19,0)² products
-    # summed at (38,0), exact while Σ(raw·1e12)² < 1e38, i.e. Σ raw² <
-    # 1e14 (NOT raw<1e6 with 1e6 nodes as r6/r7 claimed — that sits at
-    # ~1e42, 4 orders past the cap). On iteration 1 raw equals in-degree,
-    # so one hot node with in-degree ≥ ~1e7 would overflow the sum; the
-    # norm select below guards that explicitly (a NULL/invalid norm
-    # raises instead of silently nulling every score — DuckDB's HUGEINT
-    # raises on the same overflow, so the engines stay aligned). The 1e12
-    # scale cancels in score/norm, so the quotient needs no rescale.
+
+    def half_step(scores, on, by, side):
+        raw = (
+            edges.join(scores.withColumnRenamed("node", on), on)
+            .groupBy(by)
+            .agg(F.sum(_snap(F.col("s"))).alias("raw"))
+        )
+        return raw.crossJoin(F.broadcast(raw.agg(_l2(F.col("raw"))))).select(
+            F.col(by).alias("node"),
+            _round_dp(F.col("raw").cast("double") / _guarded_norm(side), 12)
+            .alias("s"),
+        )
+
     for it in range(n_iters):
         cp = (it + 1) % checkpoint_every == 0 or it == n_iters - 1
-        a_raw = (
-            edges.join(hubs.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(
-                F.sum(
-                    F.floor(F.col("h") * F.lit(1e12) + F.lit(0.5))
-                ).alias("a_raw")
-            )
-        )
-        a_norm = a_raw.agg(
-            F.sqrt(
-                F.sum(
-                    F.col("a_raw").cast("decimal(19,0)")
-                    * F.col("a_raw").cast("decimal(19,0)")
-                ).cast("double")
-            ).alias("nrm")
-        )
-        auths = a_raw.crossJoin(F.broadcast(a_norm)).select(
-            F.col("dst").alias("node"),
-            _round_dp(
-                F.col("a_raw").cast("double") / _guarded_norm("authority"),
-                12,
-            ).alias("a"),
-        )
+        # checkpoint auths before hubs read them, so the hubs checkpoint
+        # is one join+agg from a fresh snapshot, not the whole round
+        auths = half_step(hubs, "src", "dst", "authority")
         if cp:
-            # checkpoint auths BEFORE building h_raw from it (r7): the
-            # hubs checkpoint then costs a single join+agg from the fresh
-            # auths snapshot. The r6 order (both checkpointed after the
-            # full iteration was wired) recomputed the un-checkpointed
-            # a_i ← h_{i-1} ← a_{i-1} chain inside the hubs job — ~7
-            # join+agg phases per 2 iterations instead of 4.
             auths = auths.localCheckpoint(eager=True)
-        h_raw = (
-            edges.join(auths.withColumnRenamed("node", "dst"), "dst")
-            .groupBy("src")
-            .agg(
-                F.sum(
-                    F.floor(F.col("a") * F.lit(1e12) + F.lit(0.5))
-                ).alias("h_raw")
-            )
-        )
-        h_norm = h_raw.agg(
-            F.sqrt(
-                F.sum(
-                    F.col("h_raw").cast("decimal(19,0)")
-                    * F.col("h_raw").cast("decimal(19,0)")
-                ).cast("double")
-            ).alias("nrm")
-        )
-        hubs = h_raw.crossJoin(F.broadcast(h_norm)).select(
-            F.col("src").alias("node"),
-            _round_dp(
-                F.col("h_raw").cast("double") / _guarded_norm("hub"), 12
-            ).alias("h"),
-        )
+        hubs = half_step(auths, "dst", "src", "hub")
         if cp:
             hubs = hubs.localCheckpoint(eager=True)
+    return _hits_output(hubs, auths)
+
+
+def _hits_output(hubs: DataFrame, auths: DataFrame) -> DataFrame:
     return hubs.select(
-        "node",
-        F.lit("hub").alias("role"),
-        (_round_dp(F.col("h"), 9) + F.lit(0.0)).alias("score"),
+        "node", F.lit("hub").alias("role"),
+        (_round_dp(F.col("s"), 9) + F.lit(0.0)).alias("score"),
     ).union(
         auths.select(
-            "node",
-            F.lit("authority").alias("role"),
-            (_round_dp(F.col("a"), 9) + F.lit(0.0)).alias("score"),
+            "node", F.lit("authority").alias("role"),
+            (_round_dp(F.col("s"), 9) + F.lit(0.0)).alias("score"),
         )
     )
 
 
-def _score_map(df: DataFrame, key: str, val) -> DataFrame:
-    """One-row map<key → 1e12-lattice long> of a SMALL score frame —
-    broadcast into the per-iteration adjacency pass of the small-side
-    bipartite kernels. The floor is the same per-edge lattice snap the
-    generic kernels compute after their join; hoisting it to one row per
-    small-side node is exact because the snapped integer depends only on
-    the node, never the edge."""
+def _spread(big: DataFrame, arr: str, key: str, weight: Column) -> DataFrame:
+    """Big side → small side: explode each adjacency array with its row's
+    lattice weight and sum the longs per small-side ``key`` into ``_c``.
+    Partial aggregation runs before the shuffle, so the shuffle carries
+    at most |small side| × n_partitions rows."""
+    return (
+        big.select(weight.alias("_w"), F.explode(arr).alias(key))
+        .groupBy(key)
+        .agg(F.sum("_w").alias("_c"))
+    )
+
+
+def _gather(arr: str, term) -> Column:
+    """Small side → big side: Σ ``term(_m[x])`` over each adjacency array,
+    ``_m`` being the one-row broadcast map crossJoined onto the row. A key
+    absent from the map adds nothing, as an edge that finds no score row
+    drops out of the generic kernels' inner join."""
+    return F.aggregate(
+        arr,
+        F.lit(0).cast("long"),
+        lambda acc, x: acc
+        + F.coalesce(term(F.element_at(F.col("_m"), x)), F.lit(0)),
+    )
+
+
+def _score_map(
+    df: DataFrame, key: str, raw: Column, *extra: Column, value=lambda v: v
+) -> DataFrame:
+    """One-row frame ``_m``: map<key → value(raw)> over a SMALL frame, the
+    broadcast side of the small-side kernels (the broadcast-join idiom:
+    one row × |small side| entries). ``extra`` aggregates, such as a
+    norm, share the aggregate row, so ``value`` may read them; it runs
+    once per key, never per edge."""
     return df.agg(
+        F.collect_list(F.struct(F.col(key).alias("k"), raw.alias("v")))
+        .alias("_e"),
+        *extra,
+    ).select(
         F.map_from_entries(
-            F.collect_list(F.struct(F.col(key), val.alias("v")))
+            F.transform("_e", lambda e: F.struct(e["k"], value(e["v"])))
         ).alias("_m")
     )
+
+
+def _small_side(df: DataFrame, key: str, fn: str) -> int:
+    """The row count of ``df``, one row per small-side id, in the job
+    ``count`` would run. A NULL id raises: the ids key the broadcast map,
+    and a map key cannot be NULL."""
+    n, n_null = df.agg(
+        F.count(F.lit(1)), F.count(F.when(F.col(key).isNull(), 1))
+    ).first()
+    if n_null:
+        raise ValueError(f"{fn}: edges.{key} must be non-NULL (map key)")
+    return n
 
 
 def pagerank_bipartite_smallside(
@@ -897,47 +898,31 @@ def pagerank_bipartite_smallside(
     max_small_side: int = 2_000_000,
 ) -> DataFrame:
     """PageRank over the SYMMETRIZED bipartite graph (`a`, `b` columns,
-    distinct pairs, disjoint id domains), specialized for a bounded-small
-    `b` side — bit-identical to
-    ``pagerank(edges.union(edges.reversed))`` (pytest-pinned equivalence)
-    but structurally cheaper: the symmetrized edge list is never
-    materialized and NO per-iteration edge join runs. Instead the `a`-side
-    adjacency ``(a, [b...], outdeg)`` is grouped ONCE (one shuffle total),
-    and each iteration is
+    disjoint id domains), specialized for a bounded-small `b` side:
+    bit-identical to ``pagerank(edges.union(edges.reversed))``
+    (pytest-pinned), with no symmetrized edge list and no per-round edge
+    join. The `a`-side adjacency ``(a, [b...], outdeg)`` is grouped once.
+    Each round then makes the a-side ranks by :func:`_gather` against the
+    one-row map of the b side's lattice contributions, inline in the
+    same scan that makes the b-side ranks by :func:`_spread`: one
+    adjacency pass and one eager ``localCheckpoint`` (of the |b|-row
+    ``(b, outdeg, r)`` frame) per round. Under AQE, where each shuffle
+    stage and each broadcast is its own job, an 8-round build of a 300 ×
+    25 graph runs 47 jobs.
 
-    - a-side update: broadcast the b-side's per-node lattice
-      contributions as a one-row map (the broadcast-join idiom, one row ×
-      |b| entries) and fold each adjacency array in-partition — zero
-      shuffle;
-    - b-side update: explode the adjacency with the per-`a` lattice
-      contribution and hash-aggregate — the shuffle carries only
-      |b| × n_partitions partial rows.
-
-    Per iteration that is ONE adjacency pass (r11): the a-side rank is a
-    pure expression of the previous b-side map, so it is folded INLINE in
-    the b-update scan and the big (a, bs) frame is never re-materialized
-    — only the |b|-row mb frame checkpoints each round (the r10 loop
-    paid two adjacency-scale passes plus a full-adjacency localCheckpoint
-    per round). At the 10M-event anchor (~150k users × 100 categories)
-    the generic kernel's two edge-join+agg phases are likewise avoided
-    (~14M join-probe rows per round).
-
-    Scale contract: the map broadcast bounds the small side the same way
-    a broadcast join bounds its build side — ~2M entries ≈ 32 MB. Above
-    ``max_small_side`` the function falls back to the generic
-    :func:`pagerank`, which has no small-side requirement. The exact
-    arithmetic is the generic kernel's unchanged (per-edge
-    floor(rank/outdeg·1e12+0.5) snaps, order-independent long sums,
-    12-dp per-iteration resync), so the unrolled-CTE DuckDB oracle of
+    `b` must be non-NULL (it keys the map; ``ValueError`` otherwise, on
+    every route). A NULL `a` is one node that neither sends nor receives
+    rank, as in the generic kernel's src-keyed join. Above
+    ``max_small_side`` distinct `b` ids (the map's broadcast bound, ~2M
+    entries ≈ 32 MB) it falls back to the generic :func:`pagerank`. The
+    arithmetic is the generic kernel's (per-edge lattice snaps, long
+    sums, 12-dp resync, 9-dp output), so the unrolled-CTE oracle of
     `pagerank_bipartite` applies verbatim.
     """
     edges = edges.select("a", "b").localCheckpoint(eager=True)
     adj = (
         edges.groupBy("a")
-        .agg(
-            F.collect_list("b").alias("bs"),
-            F.count(F.lit(1)).alias("outdeg"),
-        )
+        .agg(F.collect_list("b").alias("bs"), F.count(F.lit(1)).alias("outdeg"))
         .localCheckpoint(eager=True)
     )
     bdeg = (
@@ -945,7 +930,8 @@ def pagerank_bipartite_smallside(
         .agg(F.count(F.lit(1)).alias("outdeg"))
         .localCheckpoint(eager=True)
     )
-    n_a, n_b = adj.count(), bdeg.count()
+    n_a = adj.count()
+    n_b = _small_side(bdeg, "b", "pagerank_bipartite_smallside")
     if n_b > max_small_side:
         sym = edges.select(
             F.col("a").alias("src"), F.col("b").alias("dst")
@@ -957,81 +943,35 @@ def pagerank_bipartite_smallside(
             "pagerank", F.lit(0.0)
         )
     base = (1.0 - damping) / n
-    lattice = lambda r: F.floor(  # noqa: E731  — the generic per-edge snap
-        F.col(r) / F.col("outdeg") * F.lit(1e12) + F.lit(0.5)
-    )
+    lattice = _snap(F.col("r") / F.col("outdeg"))
     rank_of = lambda c: _round_dp(  # noqa: E731
-        F.lit(base)
-        + F.lit(damping) * (F.col(c).cast("double") / F.lit(1e12)),
-        12,
+        F.lit(base) + F.lit(damping) * (c.cast("double") / F.lit(1e12)), 12
     )
-    fold_bs = F.aggregate(  # Σ over bs of the broadcast map's lattice entries
-        "bs",
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + F.element_at(F.col("_m"), x),
-    )
-    # r11 optimization (guide §2.4/§5): the a-side rank is a PURE
-    # EXPRESSION of the previous b-side map — rank_of(fold(bs, bmap)) —
-    # so the big (a, bs) frame is never re-materialized with rank
-    # columns. Only the |b|-row mb frame is checkpointed per iteration;
-    # each iteration is ONE adjacency pass (the old loop paid two
-    # adjacency-scale passes PLUS a full-adjacency localCheckpoint per
-    # round). mb_k consumes ua_{k-1}.r = rank_of(fold(bs, map(mb_{k-2}))),
-    # evaluated inline in the same scan — identical double arithmetic to
-    # the materialized column, bit-equal (pytest-pinned vs the generic
-    # kernel).
-    # only mb_{k-2}, mb_{k-1} and the final frame are ever read, so the
-    # loop keeps a two-slot window instead of the full history (r12): a
-    # dropped reference lets the ContextCleaner release that iteration's
-    # checkpoint blocks instead of pinning n_iters |b|-row snapshots in
-    # executor storage for the whole build.
-    mb_prev2 = None  # mb_{k-2} while building mb_k
-    mb_prev1 = bdeg.withColumn("r", F.lit(1.0 / n))  # mb_0 = uniform init
-    for k in range(1, n_iters + 1):
-        if k == 1:
-            src = adj.withColumn("_r", F.lit(1.0 / n))
-        else:
-            bmap_prev = _score_map(mb_prev2, "b", lattice("r"))
-            src = adj.crossJoin(F.broadcast(bmap_prev)).withColumn(
-                "_r",
-                _round_dp(
-                    F.lit(base)
-                    + F.lit(damping) * (fold_bs.cast("double") / F.lit(1e12)),
-                    12,
-                ),
-            )
-        mb_k = (
-            src.select(
-                F.floor(
-                    F.col("_r") / F.col("outdeg") * F.lit(1e12) + F.lit(0.5)
-                ).alias("_w"),
-                F.explode("bs").alias("b"),
-            )
-            .groupBy("b")
-            .agg(F.sum("_w").alias("_c"))
+    live = F.col("a").isNotNull()
+
+    def a_side(mb):  # the a-side ranks one round after the b-side's `mb`
+        if mb is None:
+            return adj.withColumn("r", F.lit(1.0 / n))
+        return adj.crossJoin(F.broadcast(_score_map(mb, "b", lattice))).withColumn(
+            "r", rank_of(F.when(live, _gather("bs", lambda v: v)).otherwise(0))
+        )
+
+    # Only mb_{k-2} and mb_{k-1} are read, so two slots: a dropped
+    # reference lets the ContextCleaner free that round's checkpoint.
+    mbs = [None, bdeg.withColumn("r", F.lit(1.0 / n))]
+    for _ in range(n_iters):
+        mb = (
+            _spread(a_side(mbs[0]), "bs", "b", F.when(live, lattice).otherwise(0))
             .join(F.broadcast(bdeg), "b")
-            .select("b", "outdeg", rank_of("_c").alias("r"))
+            .select("b", "outdeg", rank_of(F.col("_c")).alias("r"))
             .localCheckpoint(eager=True)
         )
-        mb_prev2, mb_prev1 = mb_prev1, mb_k
-    mb = mb_prev1
-    if n_iters == 0:
-        ua = adj.withColumn("r", F.lit(1.0 / n))
-    else:
-        bmap_final = _score_map(mb_prev2, "b", lattice("r"))
-        ua = adj.crossJoin(F.broadcast(bmap_final)).select(
-            "a",
-            _round_dp(
-                F.lit(base)
-                + F.lit(damping) * (fold_bs.cast("double") / F.lit(1e12)),
-                12,
-            ).alias("r"),
-        )
+        mbs = [mbs[1], mb]
     out = lambda df, key: df.select(  # noqa: E731
         F.col(key).alias("node"),
         (_round_dp(F.col("r"), 9) + F.lit(0.0)).alias("pagerank"),
     )
-    return out(ua, "a").union(out(mb, "b"))
+    return out(a_side(mbs[0]), "a").union(out(mbs[1], "b"))
 
 
 def hits_smallside(
@@ -1039,17 +979,29 @@ def hits_smallside(
     n_iters: int = 8,
     max_small_side: int = 2_000_000,
 ) -> DataFrame:
-    """HITS over a DIRECTED bipartite edge list (`src`, `dst`, distinct
-    pairs, disjoint id domains) specialized for a bounded-small `dst`
-    side — bit-identical to :func:`hits` (pytest-pinned) with the same
-    structural rewrite as :func:`pagerank_bipartite_smallside`: the
-    src-side adjacency is grouped once, the authority step is an
-    explode + tiny hash aggregate, the hub step folds each adjacency
-    array against the one-row broadcast authority map in-partition. The
-    exact arithmetic (1e12 lattice snaps, long sums, DECIMAL(38,0) L2
-    norms with the overflow trap, 12-dp resync) is :func:`hits`'s
-    unchanged, so the unrolled-CTE oracle applies verbatim. Falls back
-    to the generic kernel above ``max_small_side`` authorities.
+    """HITS over a DIRECTED bipartite edge list (`src`, `dst`, disjoint id
+    domains) specialized for a bounded-small `dst` side: bit-identical to
+    :func:`hits` (pytest-pinned), on the helpers of
+    :func:`pagerank_bipartite_smallside`. The src-side adjacency
+    ``(src, [dst...])`` is grouped once. Each round then builds ONE eager
+    ``localCheckpoint``, the one-row authority map: :func:`_spread` of
+    the hubs' lattice scores, with the L2 norm taken in the same
+    aggregate row, so each authority is normalized and 12-dp rounded
+    once. The hubs stay lazy: :func:`_gather` against that map,
+    normalized by a broadcast one-row norm aggregate. The last round's
+    authorities are read off its map with ``explode``. Under AQE each
+    shuffle stage and each broadcast is its own job: a round after the
+    first runs 6 (the previous map's broadcast, the hub norm's stage and
+    broadcast, the spread's stage, the map aggregate's stage, the
+    checkpoint), so an 8-round build runs 51 with the setup passes.
+
+    `dst` must be non-NULL (it keys the map; ``ValueError`` otherwise, on
+    every route). A NULL `src` gives no authority score and is a hub only
+    if it points at an authority, as in the generic kernel's joins. Falls
+    back to :func:`hits` above ``max_small_side`` distinct `dst` ids. The
+    arithmetic is :func:`hits`'s (lattice snaps, long sums, DECIMAL(38,0)
+    L2 norms with the overflow trap, 12-dp resync, 9-dp output), so the
+    unrolled-CTE oracle applies verbatim.
     """
     if n_iters < 1:
         raise ValueError("hits_smallside() needs at least one iteration")
@@ -1059,69 +1011,29 @@ def hits_smallside(
         .agg(F.collect_list("dst").alias("ds"))
         .localCheckpoint(eager=True)
     )
-    n_dst = edges.select("dst").distinct().count()
+    n_dst = _small_side(edges.select("dst").distinct(), "dst", "hits_smallside")
     if n_dst > max_small_side:
         return hits(edges, n_iters=n_iters)
-    snap = lambda c: F.floor(F.col(c) * F.lit(1e12) + F.lit(0.5))  # noqa: E731
-    norm_of = lambda raw: F.sqrt(  # noqa: E731 — hits()'s exact norm
-        F.sum(
-            F.col(raw).cast("decimal(19,0)") * F.col(raw).cast("decimal(19,0)")
-        ).cast("double")
-    ).alias("nrm")
-    hubs = adj.withColumn("h", F.lit(1.0))
-    auths = None
+    live = F.col("src").isNotNull()
+    hit = live | F.exists("ds", lambda x: F.map_contains_key(F.col("_m"), x))
+    hubs = adj.withColumn("s", F.lit(1.0))
     for _ in range(n_iters):
-        # a_raw is checkpointed EAGERLY at |dst| rows (r12, guide §2.4):
-        # the a_norm broadcast and the auths projection both consume it,
-        # and without the checkpoint each re-ran the adjacency-scale
-        # explode+aggregate — two fat passes per iteration where one
-        # suffices (interleaved A/B: 7% sf0.1 / 10-15% 1M / 7% 10M).
-        # auths then derives NARROWLY from the tiny checkpoint and needs
-        # no checkpoint of its own (its two consumers — amap and the
-        # final output — each redo one broadcast-crossJoin projection).
-        a_raw = (
-            hubs.select(snap("h").alias("_w"), F.explode("ds").alias("dst"))
-            .groupBy("dst")
-            .agg(F.sum("_w").alias("a_raw"))
-            .localCheckpoint(eager=True)
-        )
-        a_norm = a_raw.agg(norm_of("a_raw"))
-        auths = a_raw.crossJoin(F.broadcast(a_norm)).select(
+        amap = _score_map(
+            _spread(hubs.where(live), "ds", "dst", _snap(F.col("s"))),
             "dst",
-            _round_dp(
-                F.col("a_raw").cast("double") / _guarded_norm("authority"),
-                12,
-            ).alias("a"),
-        )
-        amap = _score_map(auths, "dst", snap("a"))
-        h_raw = adj.crossJoin(F.broadcast(amap)).select(
-            "src",
-            "ds",
-            F.aggregate(
-                "ds",
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + F.element_at(F.col("_m"), x),
-            ).alias("h_raw"),
+            F.col("_c"),
+            _l2(F.col("_c")),
+            value=lambda raw: _round_dp(
+                raw.cast("double") / _guarded_norm("authority"), 12
+            ),
         ).localCheckpoint(eager=True)
-        h_norm = h_raw.agg(norm_of("h_raw"))
-        # h is DERIVED lazily from the checkpointed h_raw (one division
-        # per row in each consumer) — skipping a third array
-        # materialization per iteration
-        hubs = h_raw.crossJoin(F.broadcast(h_norm)).select(
-            "src",
-            "ds",
-            _round_dp(
-                F.col("h_raw").cast("double") / _guarded_norm("hub"), 12
-            ).alias("h"),
+        h = adj.crossJoin(F.broadcast(amap)).where(hit).withColumn(
+            "raw", _gather("ds", _snap)
         )
-    return hubs.select(
-        F.col("src").alias("node"),
-        F.lit("hub").alias("role"),
-        (_round_dp(F.col("h"), 9) + F.lit(0.0)).alias("score"),
-    ).union(
-        auths.select(
-            F.col("dst").alias("node"),
-            F.lit("authority").alias("role"),
-            (_round_dp(F.col("a"), 9) + F.lit(0.0)).alias("score"),
+        hubs = h.crossJoin(F.broadcast(h.agg(_l2(F.col("raw"))))).withColumn(
+            "s", _round_dp(F.col("raw").cast("double") / _guarded_norm("hub"), 12)
         )
+    return _hits_output(
+        hubs.withColumnRenamed("src", "node"),
+        amap.select(F.explode("_m").alias("node", "s")),
     )

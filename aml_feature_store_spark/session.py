@@ -21,8 +21,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "aml_feature_store_spark",
@@ -30,7 +28,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or get) a SparkSession with the engine's standard config."""
+    """Build (or get) a SparkSession with the engine's standard config.
+
+    ``master`` defaults to ``local[N,2]`` and ``shuffle_partitions`` to N,
+    where N is the number of CPUs this process may run on."""
     # glibc malloc tuning for the Python workers (they inherit the JVM's
     # env, which inherits ours when the gateway spawns it — so set BEFORE
     # getOrCreate): without this, every >128 KB numpy buffer is a fresh
@@ -42,12 +43,12 @@ def get_spark(
     # profile; cluster deployments tune per executor memory.
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(256 * 1024 * 1024))
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(256 * 1024 * 1024))
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = len(os.sched_getaffinity(0))
     builder = (
         SparkSession.builder.appName(app_name)
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -146,11 +146,11 @@ def generate_documents(
     ).cast("int")
     words = F.transform(
         F.sequence(F.lit(1), n_words),
-        lambda j: varr.getItem(
+        lambda j: varr[
             F.pmod(F.xxhash64(base, j, F.lit(seed + 1)), F.lit(len(vocab))).cast(
                 "int"
             )
-        ),
+        ],
     )
     text = F.concat(
         F.array_join(words, " "),
@@ -265,7 +265,7 @@ def generate_events(
         F.when(u(6) < hot_frac, F.lit(0))
         .otherwise((u(2) * n_users).cast("long"))
         .alias("user_id"),
-        types.getItem((u(3) * 5).cast("int")).alias("event_type"),
+        types[(u(3) * 5).cast("int")].alias("event_type"),
         F.round(F.greatest(F.exp(F.randn(seed + 4) * 1.5 + 3.0), F.lit(0.01)), 2)
         .alias("value"),
         F.format_string('{"k": %d}', (u(5) * n_merchants).cast("int"))

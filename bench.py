@@ -659,7 +659,12 @@ def main() -> None:
     from aml_feature_store_spark.catalog import queries
     from aml_feature_store_spark.session import get_spark
 
-    spark = get_spark("bench")
+    n_cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+    spark = get_spark(
+        "bench", master=f"local[{n_cpus},2]", shuffle_partitions=n_cpus
+    )
     qs = queries()
     names = [n for n in HEADLINE if n in qs] + [
         n for n in sorted(qs) if n not in HEADLINE and os.environ.get("BENCH_ALL")

@@ -295,13 +295,49 @@ def test_masked_bfs_equals_row_bfs_random_graph(spark):
     assert [f.name for f in empty.schema.fields] == ["root", "node", "dist"]
 
 
-def test_pagerank_smallside_equals_generic_random_bipartite(spark):
+# Degenerate bipartite edge lists for the small-side pins, as (big, small)
+# pairs; the small side has negative ids.
+_DEGENERATE = {
+    "empty": [],
+    "one_edge": [(1, -1)],
+    "dup_pairs": [(1, -1), (1, -1), (2, -1), (2, -2)],
+    "null_big": [(1, -1), (2, -1), (2, -2), (None, -1), (None, -3)],
+    "null_big_isolated": [(1, -1), (None, -2)],
+    "null_small": [(1, -1), (2, -1), (2, -2), (1, None)],
+}
+
+
+def _bipartite(spark, graph, seed, schema):
+    """The named degenerate graph, or a random bipartite graph of 1,500
+    draws over 300 × 25 ids (about 1,350 distinct pairs)."""
+    import numpy as np
+
+    if graph != "random":
+        return spark.createDataFrame(_DEGENERATE[graph], schema)
+    rng = np.random.default_rng(seed)
+    pairs = {
+        (int(a), -int(b) - 1)
+        for a, b in zip(rng.integers(0, 300, 1500), rng.integers(0, 25, 1500))
+    }
+    return spark.createDataFrame(sorted(pairs), schema)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+@pytest.mark.parametrize(
+    "graph,n_iters",
+    [("random", k) for k in (0, 1, 2, 8)] + [(g, 1) for g in _DEGENERATE],
+)
+def test_pagerank_smallside_equals_generic(spark, graph, n_iters):
     """pagerank_bipartite_smallside is BIT-equal (==, not approx) to the
     generic pagerank over the symmetrized edge list — the structural
     rewrite (adjacency arrays + one-row broadcast score map + explode
-    partial-agg) may not change a single 12-dp intermediate. Also pins
-    the max_small_side fallback path to the same rows."""
-    import numpy as np
+    partial-agg) may not change a single 12-dp intermediate — and so is
+    its max_small_side fallback. A NULL `a` is a node that neither sends
+    nor receives rank; a NULL `b` cannot key the broadcast map and raises
+    on both routes."""
     from pyspark.sql import functions as F
 
     from aml_feature_store_spark.operators.graph import (
@@ -309,55 +345,69 @@ def test_pagerank_smallside_equals_generic_random_bipartite(spark):
         pagerank_bipartite_smallside,
     )
 
-    rng = np.random.default_rng(10)
-    pairs = {
-        (int(a), -int(b) - 1)
-        for a, b in zip(rng.integers(0, 300, 1500), rng.integers(0, 25, 1500))
-    }
-    base = spark.createDataFrame(sorted(pairs), "a long, b long")
+    base = _bipartite(spark, graph, 10, "a long, b long")
+    small = lambda **kw: _rows(  # noqa: E731
+        pagerank_bipartite_smallside(base, n_iters=n_iters, **kw)
+    )
+    if graph == "null_small":
+        for kw in ({}, {"max_small_side": 0}):
+            with pytest.raises(ValueError, match="edges.b must be non-NULL"):
+                small(**kw)
+        return
     sym = base.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
         base.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    generic = sorted(map(tuple, pagerank(sym, n_iters=8).collect()))
-    small = sorted(
-        map(tuple, pagerank_bipartite_smallside(base, n_iters=8).collect())
-    )
-    assert small == generic and len(small) > 300
-    fallback = sorted(
-        map(
-            tuple,
-            pagerank_bipartite_smallside(
-                base, n_iters=8, max_small_side=1
-            ).collect(),
-        )
-    )
-    assert fallback == generic
+    generic = _rows(pagerank(sym, n_iters=n_iters))
+    assert small() == generic
+    assert len(generic) > 300 or graph != "random"
+    if (graph, n_iters) == ("random", 1):  # the fallback runs the generic kernel
+        assert small(max_small_side=0) == generic
 
 
-def test_hits_smallside_equals_generic_random_bipartite(spark):
-    """hits_smallside ≡ hits bit-exactly on a random directed bipartite
-    graph, including the L2-norm DECIMAL(38,0) recipe and the 12-dp
-    resync; fallback path pinned too."""
-    import numpy as np
-
+@pytest.mark.parametrize(
+    "graph,n_iters",
+    [("random", k) for k in (1, 2, 8)] + [(g, 1) for g in _DEGENERATE],
+)
+def test_hits_smallside_equals_generic(spark, graph, n_iters):
+    """hits_smallside ≡ hits bit-exactly, including the L2-norm
+    DECIMAL(38,0) recipe and the 12-dp resync, and so is its
+    max_small_side fallback. A NULL `src` feeds no authority and is a hub
+    only if it points at one; a NULL `dst` cannot key the broadcast map
+    and raises on both routes."""
     from aml_feature_store_spark.operators.graph import hits, hits_smallside
 
-    rng = np.random.default_rng(11)
-    pairs = {
-        (int(a), -int(b) - 1)
-        for a, b in zip(rng.integers(0, 300, 1500), rng.integers(0, 25, 1500))
-    }
-    edges = spark.createDataFrame(sorted(pairs), "src long, dst long")
-    generic = sorted(map(tuple, hits(edges, n_iters=8).collect()))
-    small = sorted(map(tuple, hits_smallside(edges, n_iters=8).collect()))
-    assert small == generic and len(small) > 300
-    fallback = sorted(
-        map(
-            tuple,
-            hits_smallside(edges, n_iters=8, max_small_side=1).collect(),
-        )
+    edges = _bipartite(spark, graph, 11, "src long, dst long")
+    small = lambda **kw: _rows(  # noqa: E731
+        hits_smallside(edges, n_iters=n_iters, **kw)
     )
-    assert fallback == generic
+    if graph == "null_small":
+        for kw in ({}, {"max_small_side": 0}):
+            with pytest.raises(ValueError, match="edges.dst must be non-NULL"):
+                small(**kw)
+        return
+    generic = _rows(hits(edges, n_iters=n_iters))
+    assert small() == generic
+    assert len(generic) > 300 or graph != "random"
+    if (graph, n_iters) == ("random", 1):  # the fallback runs the generic kernel
+        assert small(max_small_side=0) == generic
+
+
+def test_hits_smallside_build_checkpoints_once_per_round(spark):
+    """An 8-round hits_smallside build on the random graph fires at most
+    60 jobs: one eager checkpoint per round, about 6 jobs per round
+    under AQE (each shuffle stage and each broadcast is its own job),
+    plus the adjacency and count passes."""
+    from aml_feature_store_spark.operators.graph import hits_smallside
+
+    edges = _bipartite(spark, "random", 11, "src long, dst long")
+    sc = spark.sparkContext
+    sc.setJobGroup("hits_smallside_build", "hits_smallside_build")
+    try:
+        hits_smallside(edges, n_iters=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("hits_smallside_build")) <= 60
 
 
 def test_round_dp_matches_duckdb_round(spark):
