@@ -33,6 +33,7 @@ counts use collect_set (memory ∝ distinct per frame) — switch
 
 from __future__ import annotations
 
+import logging
 import os
 from dataclasses import dataclass, field
 from decimal import Decimal
@@ -768,11 +769,11 @@ def trailing_features_scalable(
     return out.select(*keep)
 
 
-# frame density (estimated rows per widest frame) above which the O(rows)
-# scalable strategy beats WindowExec's O(rows × frame) recompute; measured
-# crossover is well below this on local[32] (hot anchor: 23 s vs 4 s at
-# ~220-row frames; cold anchor: 2.2 s vs 3.5 s at ~2-row frames)
+# frame rows above which the O(rows) plans beat WindowExec; on local[4]
+# trailing's crossover lies between 27.6 and 31.7 (tools/route_sweep.py)
 AUTO_FRAME_ROWS_THRESHOLD = 32
+
+_route_log = logging.getLogger("aml_feature_store_spark.route")
 
 # per-entity row count above which even the O(rows) scalable plan's
 # single-task-per-entity execution dominates the query and the hot
@@ -825,14 +826,17 @@ def _entity_stats(
     min_rows: int = HOT_TASK_ROWS_THRESHOLD,
     cap: int = 32,
     sample: bool | None = None,
-) -> tuple[float, list]:
+) -> tuple[float, float, list]:
     """The routing stats pass: ONE groupBy(entity) → (count, min ms,
-    max ms) and ONE ``.first()`` over it holding both routing
-    statistics, so the router pays a single aggregate for both
-    decisions.
+    max ms) and ONE ``.first()`` over it holding every routing
+    statistic, so the router pays a single aggregate for all decisions.
+    With fₑ = cₑ × min(window / spanₑ, 1), the frame rows of entity e:
 
-    - ``est``: expected rows per ``window_s`` frame of the DENSEST
-      entity — max over entities of count × min(window / span, 1).
+    - ``max``: the DENSEST entity's frame rows, max fₑ — what one
+      WindowExec task revisits per row (the pit router's statistic).
+    - ``mean``: the rows-weighted mean frame rows Σ cₑ·fₑ / Σ cₑ — the
+      frame rows WindowExec revisits per row over the whole input (the
+      trailing routers' statistic).
     - ``hot``: the ≤ ``cap`` entities with count ≥ ``min_rows``, as
       (−count, entity, min ms, max ms) structs sorted ascending, i.e. by
       count descending with ties broken by entity. The collect before
@@ -840,8 +844,10 @@ def _entity_stats(
 
     On the sampled path (:func:`_stats_source`) counts scale by the
     inverse fraction and entities with < _STATS_SAMPLE_MIN_ROWS sampled
-    rows drop out of ``est`` only (scaling a 1-row sample would
-    fabricate density); the hot filter is the scaled count alone."""
+    rows add nothing to ``max`` nor to the mean's numerator (scaling a
+    1-row sample would fabricate density), but their rows still count
+    in the mean's denominator; the hot filter is the scaled count
+    alone."""
     stats_df, inv = _stats_source(df, sample)
     ms_col = F.unix_millis(F.col(ts_col))
     per = stats_df.groupBy(entity_col).agg(
@@ -871,9 +877,10 @@ def _entity_stats(
     )
     row = per.agg(
         F.max(dens).alias("est"),
+        (F.sum(F.col("c") * dens) / F.sum("c")).alias("mean"),
         F.slice(F.sort_array(F.collect_list(hot)), 1, cap).alias("hot"),
     ).first()
-    return float(row["est"] or 0.0), row["hot"] or []
+    return float(row["est"] or 0.0), float(row["mean"] or 0.0), row["hot"] or []
 
 
 def _hot_spec(hot: list, window_max_s: int, buckets: int) -> HotBucketSpec | None:
@@ -915,9 +922,9 @@ def hot_entity_cuts(
     already applied. Cuts are a LOAD-BALANCING plan, never a
     correctness surface: any (lo, width) yields bit-identical results
     (pytest-pinned), so sampling noise only moves bucket edges."""
-    _, hot = _entity_stats(
+    hot = _entity_stats(
         df, entity_col, ts_col, window_max_s, min_rows, cap, sample
-    )
+    )[2]
     return _hot_spec(hot, window_max_s, buckets)
 
 
@@ -930,21 +937,41 @@ def estimate_frame_rows(
 ) -> float:
     """One cheap stats pass (:func:`_entity_stats`) → expected rows per
     trailing frame of the DENSEST entity (per-entity rows ×
-    window/per-entity-span, maxed); the shared density heuristic for
-    every adaptive trailing strategy.
+    window/per-entity-span, maxed).
 
-    The max — not the mean — is the routing statistic: WindowExec cost
-    is per TASK, and a skewed key (one entity owning 25% of the log)
-    makes its task O(rows × frame) while the mean still looks sparse.
-    The r6 skew anchor caught exactly that: mean density 2.3 rows/frame
-    routed the hot anchor onto WindowExec and one task ran for minutes.
-    At warehouse scale (input > STATS_SAMPLE_BYTES, or ``sample=True``)
-    the pass runs on a 1% row sample: counts scale by 1/frac, entities
-    with < _STATS_SAMPLE_MIN_ROWS sampled rows are dropped (they cannot
-    cross a routing threshold), and the shrunk sample span only
+    The pit router reads this max: the as-of join computes one window,
+    so one hot entity's WindowExec task decides its wall. The trailing
+    routers read the rows-weighted mean (:func:`_entity_stats`), which
+    a skewed key still dominates (the skew anchor's hot key owns 25% of
+    the log: mean 2082 against max 8328) but a few hot entities in a
+    sparse log do not. At warehouse scale (input > STATS_SAMPLE_BYTES,
+    or ``sample=True``) the pass runs on a 1% row sample: counts scale
+    by 1/frac, entities with < _STATS_SAMPLE_MIN_ROWS sampled rows are
+    dropped (they cannot cross a routing threshold), and the shrunk
+    sample span only
     OVERestimates density — erring toward the O(rows) plan, the safe
     direction since both strategies are bit-identical."""
     return _entity_stats(df, entity_col, ts_col, window_s, sample=sample)[0]
+
+
+def _dense_route(
+    op: str, df: DataFrame, entity_col: str, ts_col: str, window_s: int,
+    by_max: bool = False, threshold: float | None = None,
+    min_rows: int = HOT_TASK_ROWS_THRESHOLD,
+) -> tuple[bool, list]:
+    """(True for the O(rows) plan, hot list) off one stats pass: the
+    densest entity's (``by_max``) or the rows-weighted mean frame rows
+    against ``threshold`` (default AUTO_FRAME_ROWS_THRESHOLD at call
+    time), logged as one DEBUG record on ``_route_log``."""
+    if threshold is None:
+        threshold = AUTO_FRAME_ROWS_THRESHOLD
+    mx, mean, hot = _entity_stats(df, entity_col, ts_col, window_s, min_rows)
+    dense = (mx if by_max else mean) > threshold
+    _route_log.debug(
+        "%s route=%s max_frame_rows=%.2f mean_frame_rows=%.2f threshold=%s",
+        op, "scalable" if dense else "window", mx, mean, threshold,
+    )
+    return dense, hot
 
 
 def trailing_features_auto(
@@ -954,10 +981,15 @@ def trailing_features_auto(
     hot_rows_threshold: int = HOT_TASK_ROWS_THRESHOLD,
 ) -> DataFrame:
     """Adaptive physical strategy for the trailing-window operator: one
-    cheap stats pass estimates the widest window's expected frame size
-    (rows/entity × W/span) and picks WindowExec (small frames — one sort,
-    no probe blowup) or the O(rows) cumsum/chunked-extrema strategy (wide
-    frames — WindowExec's per-row frame recompute dominates). Both
+    cheap stats pass estimates the widest window's rows-weighted mean
+    frame rows (Σ cₑ·fₑ / Σ cₑ, see :func:`_entity_stats`) and picks
+    WindowExec (small frames — one sort, no probe blowup) or the O(rows)
+    cumsum/chunked-extrema strategy (wide frames — WindowExec's per-row
+    frame recompute dominates). The mean, not the densest entity, is
+    the statistic because WindowExec's cost is the frame rows it
+    revisits for each row over the whole input: two hot users at 66
+    frame rows in a log whose mean is 14.5 run about 2× faster on
+    WindowExec. Both
     strategies are bit-identical (property-tested), so the choice is
     purely physical — the Catalyst-style decision Spark cannot make
     itself because it has no frame-density statistics.
@@ -976,13 +1008,12 @@ def trailing_features_auto(
     """
     if spec.distinct_cols and not spec.distinct_exact:
         return trailing_features(df, spec)
-    if frame_rows_threshold is None:
-        frame_rows_threshold = AUTO_FRAME_ROWS_THRESHOLD
     w = max(spec.windows.values())
-    est, hot = _entity_stats(
-        df, spec.entity_col, spec.ts_col, w, min_rows=hot_rows_threshold
+    dense, hot = _dense_route(
+        "trailing_features_auto", df, spec.entity_col, spec.ts_col, w,
+        threshold=frame_rows_threshold, min_rows=hot_rows_threshold,
     )
-    if est <= frame_rows_threshold:
+    if not dense:
         return trailing_features(df, spec)
     return trailing_features_scalable(
         df, spec, hot_buckets=_hot_spec(hot, w, HOT_BUCKETS)
@@ -1003,8 +1034,9 @@ def trailing_flag_counts(
     conditional count.
 
     The density router picks the plan, like :func:`trailing_features_auto`
-    (densest entity's frame rows vs ``AUTO_FRAME_ROWS_THRESHOLD``, read
-    at call time); both plans are bit-identical:
+    (rows-weighted mean frame rows vs ``AUTO_FRAME_ROWS_THRESHOLD``, read
+    at call time: its WindowExec cost is the frame rows revisited per
+    row, summed over the input); both plans are bit-identical:
 
     - sparse frames: one WindowExec of conditional sums over the range
       frame (one Exchange + one Sort);
@@ -1013,8 +1045,10 @@ def trailing_flag_counts(
       machinery is needed) — O(rows), independent of frame width.
     """
     names = list(flags)
-    est = estimate_frame_rows(df, entity_col, ts_col, window_s)
-    if est <= AUTO_FRAME_ROWS_THRESHOLD:
+    dense, _ = _dense_route(
+        "trailing_flag_counts", df, entity_col, ts_col, window_s
+    )
+    if not dense:
         w = (
             Window.partitionBy(entity_col)
             .orderBy(_ms(ts_col))

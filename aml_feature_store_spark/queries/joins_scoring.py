@@ -33,8 +33,10 @@ def pit_join_purchases_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of features for each purchase over ALL the user's events in the
     trailing 24h (J2): union-spine + one range-frame window pass — replaces
     the reference's O(n·m) per-row loop (advanced_features.py:399-419).
-    Physical strategy is adaptive: dense frames route to the O(rows)
-    reader/probe plan (bit-identical, property-tested)."""
+    Physical strategy is adaptive: a densest user's 24 h frame above
+    AUTO_FRAME_ROWS_THRESHOLD rows routes to the O(rows) reader/probe
+    plan (bit-identical, property-tested). Not the trailing routers'
+    mean: one window, so one hot user's WindowExec task sets the wall."""
     events = load_table(spark, sf_dir, "events")
     spine = events.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"

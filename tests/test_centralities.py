@@ -176,7 +176,12 @@ def test_pagerank_ring_is_uniform(spark):
 def test_hits_star_concentrates_authority(spark):
     """Directed star u1..u3 -> m plus a side edge u1 -> m2: the shared
     sink m must take (almost) all authority; u1 (touching both sinks)
-    must out-hub the single-edge users. Scores are L2-normalized."""
+    must out-hub the single-edge users. Scores are L2-normalized.
+
+    Closed form: the authorities are the principal eigenvector of
+    AᵀA = [[3, 1], [1, 1]], i.e. (cos π/8, sin π/8), and the hubs are
+    A·a normalized. The eigenvalue ratio (2 − √2)/(2 + √2) ≈ 0.17
+    shrinks the error per round; 8 rounds is the fewest within 1e-6."""
     import math
 
     from aml_feature_store_spark.operators.graph import hits
@@ -185,13 +190,19 @@ def test_hits_star_concentrates_authority(spark):
         [("u1", "m"), ("u2", "m"), ("u3", "m"), ("u1", "m2")],
         ["src", "dst"],
     )
-    rows = hits(edges, n_iters=30).collect()
+    rows = hits(edges, n_iters=8).collect()
     hubs = {r["node"]: r["score"] for r in rows if r["role"] == "hub"}
     auths = {r["node"]: r["score"] for r in rows if r["role"] == "authority"}
     assert auths["m"] > 0.9 and auths["m"] > auths["m2"]
     assert hubs["u1"] > hubs["u2"] == hubs["u3"]
     assert math.isclose(sum(v * v for v in hubs.values()), 1.0, abs_tol=1e-6)
     assert math.isclose(sum(v * v for v in auths.values()), 1.0, abs_tol=1e-6)
+    c, s = math.cos(math.pi / 8), math.sin(math.pi / 8)
+    norm = math.hypot(c + s, c, c)
+    assert auths == pytest.approx({"m": c, "m2": s}, abs=1e-6)
+    assert hubs == pytest.approx(
+        {"u1": (c + s) / norm, "u2": c / norm, "u3": c / norm}, abs=1e-6
+    )
 
 
 def test_bounded_exact_matches_brandes(spark):

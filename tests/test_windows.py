@@ -712,6 +712,7 @@ def test_routing_stats_sample_agrees_with_full(spark):
 
     from aml_feature_store_spark.operators.windows import (
         AUTO_FRAME_ROWS_THRESHOLD,
+        _entity_stats,
         estimate_frame_rows,
         hot_entity_cuts,
     )
@@ -739,6 +740,11 @@ def test_routing_stats_sample_agrees_with_full(spark):
         est_samp > AUTO_FRAME_ROWS_THRESHOLD
     )
     assert est_samp == pytest.approx(est_full, rel=0.25)
+    # the rows-weighted mean: cold entities fall under the sampled noise
+    # floor but keep their rows in the denominator (≈ 45k both ways)
+    mean_full = _entity_stats(df, "user_id", "ts", 86400, sample=False)[1]
+    mean_samp = _entity_stats(df, "user_id", "ts", 86400, sample=True)[1]
+    assert mean_samp == pytest.approx(mean_full, rel=0.25)
     hb_full = hot_entity_cuts(df, "user_id", "ts", 86400, min_rows=30_000,
                               sample=False)
     hb_samp = hot_entity_cuts(df, "user_id", "ts", 86400, min_rows=30_000,
@@ -843,13 +849,14 @@ def test_auto_build_runs_one_stats_pass(spark, tmp_path, monkeypatch):
 
 
 def test_fused_stats_exact_on_skew_fixture(spark):
-    """estimate_frame_rows and hot_entity_cuts, both readers of the one
-    per-entity aggregate, return hand-computed values: the densest
-    entity's frame rows, and the hot set by count descending with ties
-    broken by entity."""
+    """estimate_frame_rows, the rows-weighted mean and hot_entity_cuts,
+    all readers of the one per-entity aggregate, return hand-computed
+    values: the densest entity's frame rows, Σ cₑ·fₑ / Σ cₑ, and the hot
+    set by count descending with ties broken by entity."""
     from pyspark.sql import functions as F
 
     from aml_feature_store_spark.operators.windows import (
+        _entity_stats,
         estimate_frame_rows,
         hot_entity_cuts,
     )
@@ -871,6 +878,14 @@ def test_fused_stats_exact_on_skew_fixture(spark):
         df = leg if df is None else df.unionByName(leg)
     # spans: 35 940 s, 359 400 s, 2 516 400 s
     assert estimate_frame_rows(df, "user_id", "ts", 86400) == 600.0
+    f = [600.0, 600 * (86400 / 359_400), 700 * (86400 / 2_516_400),
+         5 * (86400 / (4 * 6 * 86400))]
+    c = [600, 600, 700, 10 * 5]
+    mean = sum(ci * fi for ci, fi in zip(c, f)) / sum(c)
+    assert mean == pytest.approx(237.63, abs=0.01)
+    assert _entity_stats(df, "user_id", "ts", 86400)[1] == pytest.approx(
+        mean, rel=1e-12
+    )
     assert estimate_frame_rows(df, "user_id", "ts", 3600) == max(
         600 * (3600_000 / 35_940_000),
         600 * (3600_000 / 359_400_000),
@@ -892,6 +907,86 @@ def test_fused_stats_exact_on_skew_fixture(spark):
     assert list(hb.ents) == [3, 1, 2]
     assert hb.ents[2] == cut(600, 600)
     assert hot_entity_cuts(df, "user_id", "ts", 86400, min_rows=701) is None
+
+
+def _route_input(spark, legs):
+    """Event log from ``(n, user, seconds)`` legs: ``spark.range(n)`` with
+    the user and the offset from 2023-11-14 as SQL expressions of ``id``."""
+    df = None
+    for k, (n, user, secs) in enumerate(legs):
+        leg = spark.range(n).select(
+            (F.col("id") + k * 1_000_000).alias("event_id"),
+            F.timestamp_seconds(F.lit(1_700_000_000) + F.expr(secs)).alias("ts"),
+            F.expr(user).cast("long").alias("user_id"),
+            (F.col("id") % 97).cast("double").alias("value"),
+        )
+        df = leg if df is None else df.unionByName(leg)
+    return df
+
+
+_ROUTE_INPUTS = {
+    # backfill's shape: 2 hot users with 2000 rows over 30 days (≈ 67
+    # frame rows), 298 users with ≈ 54 (≈ 1.8): max 66.7, mean ≈ 14.8
+    "backfill_skew": [(4000, "id % 2", "id div 2 * 1296"),
+                      (16_000, "2 + id % 298", "id * 7919 % 2592000")],
+    # the hot anchor's density: 20 users with 440 rows over 2 days (≈ 220)
+    "uniform_dense": [(8800, "id % 20", "id * 7919 % 172800")],
+    # test_frame_estimate_is_skew_aware's fixture: 1000 one-row users
+    # 100 days apart, one user with 2000 rows in one day (mean ≈ 1334)
+    "skew_aware": [(1000, "id + 1", "id * 8640"), (2000, "0", "id * 40")],
+    # one hot user with 2% of the rows inside a day: max 300, mean ≈ 7.7
+    "small_share_hot": [(300, "0", "id * 200"),
+                        (14_700, "1 + id % 300", "id * 7919 % 2592000")],
+}
+
+
+@pytest.mark.parametrize(
+    "router,fixture,route",
+    [
+        ("trailing", "backfill_skew", "window"),
+        ("trailing", "small_share_hot", "window"),
+        ("trailing", "uniform_dense", "scalable"),
+        ("trailing", "skew_aware", "scalable"),
+        ("flags", "backfill_skew", "window"),
+        ("flags", "uniform_dense", "scalable"),
+        ("flags", "skew_aware", "scalable"),
+        ("pit", "small_share_hot", "scalable"),
+    ],
+)
+def test_router_route_and_decision_record(spark, caplog, router, fixture,
+                                          route):
+    """Each router's executed plan and its DEBUG decision record. The
+    trailing routers read the rows-weighted mean frame rows, so a few
+    hot users in a sparse log stay on WindowExec; the pit router reads
+    the densest entity, so one small-share hot user takes O(rows). The
+    plan carries an O(rows)-only column exactly on the scalable route."""
+    import logging
+
+    from aml_feature_store_spark.operators import pit, windows
+
+    df = _route_input(spark, _ROUTE_INPUTS[fixture])
+    with caplog.at_level(logging.DEBUG, logger="aml_feature_store_spark.route"):
+        if router == "trailing":
+            op, marker = "trailing_features_auto", "_win"
+            out = windows.trailing_features_auto(
+                df, TrailingWindowSpec(windows={"1h": 3600, "24h": 86400})
+            )
+        elif router == "flags":
+            op, marker = "trailing_flag_counts", "_probe"
+            out = windows.trailing_flag_counts(
+                df, {"big": F.col("value") > 50}, 86400
+            )
+        else:
+            op, marker = "point_in_time_features_auto", "_kind"
+            out = pit.point_in_time_features_auto(
+                df.filter(F.col("event_id") % 10 == 0), df
+            )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert (marker in plan) == (route == "scalable")
+    [rec] = [r.getMessage() for r in caplog.records
+             if r.name == "aml_feature_store_spark.route"]
+    assert rec.startswith(f"{op} route={route} max_frame_rows=")
+    assert "mean_frame_rows=" in rec and rec.endswith("threshold=32")
 
 
 def test_jdiv_truncates_toward_zero():
